@@ -796,7 +796,7 @@ object ScaleBench {
     TraceSink.writeReferenceCsv(
       new MCBattery(spark, RngFamily.Philox).simulate(specs), specs)
     val sec = (System.nanoTime() - t0) / 1e9
-    val pts = specs.map(s => s.numberSimulations * (s.numberPoints + 1)).sum
+    val pts = specs.map(s => s.numberSimulations * (s.numberPoints + s.startingPoint.size)).sum
     println(f"[simdemo] workloads A+B: ${specs.map(_.numberSimulations).sum}%,d traces, " +
       f"$pts%,d points, generated+written in $sec%.2f s on ${spark.sparkContext.master}")
     println(f"""{"metric":"simdemo","mult":$mult,"traces":${specs.map(_.numberSimulations).sum},"points":$pts,"sec":$sec%.3f,"master":"${spark.sparkContext.master}"}""")

@@ -1,7 +1,8 @@
 package graft.core
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.io.BufferedOutputStream
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Trace sinks.
@@ -28,61 +29,39 @@ object TraceSink {
   def writeParquet(traces: DataFrame, dir: String): Unit =
     traces.write.mode(SaveMode.Overwrite).partitionBy("model_id").parquet(dir)
 
-  /** Reference-parity sink: exactly one local CSV file per model at each
-    * spec's `resolvedOutputPath` (default `./{i}.txt`,
-    * `parallel_simulations.py:176-179`), rows ordered by sim_id, overwritten
-    * on rerun. Funnels each model through one task — use only at
-    * demo/parity scale; the reference itself is single-file-per-model too.
+  /** Reference-parity sink: exactly one local CSV file per spec at its
+    * `resolvedOutputPath` (default `./{i}.txt`,
+    * `parallel_simulations.py:176-179`), one line per trace in sim_id order,
+    * overwritten on rerun. A spec whose model has no rows gets an empty
+    * file; specs sharing a `modelId` each receive that model's file.
     *
-    * ONE Spark job for the whole battery (not one per model): rows are
-    * hash-repartitioned on model_id and sorted (model_id, sim_id) within
-    * partitions, then written `partitionBy(model_id)` — the writer's
-    * required ordering (partition columns) is already a prefix of ours, so
-    * no extra sort is inserted and each model lands as a single
-    * sim_id-ordered part file, which the driver then just renames. (Single
-    * file per model relies on the default
-    * `spark.sql.files.maxRecordsPerFile = 0`; a battery big enough to
-    * trip a configured cap has outgrown the parity sink.)
+    * One shuffle-free job: the specs' rows are projected to
+    * `(model_id, sim_id, CSV line bytes)` and collected; the driver groups
+    * them by model and orders each group by sim_id — `simulate` emits each
+    * partition as an ordered run, which TimSort merges in near-linear
+    * time — and streams each file through one buffered writer. The files
+    * therefore land on the driver's filesystem, where the reference writes
+    * them too.
+    *
+    * The whole battery passes through driver memory and is bounded by
+    * `spark.driver.maxResultSize`: use it at demo/parity scale. Larger
+    * batteries belong on [[writePartitionedText]], which writes from the
+    * executors.
     */
   def writeReferenceCsv(traces: DataFrame, specs: Seq[SimulationSpec]): Unit = {
     if (specs.isEmpty) return
-    val tmp = Files.createTempDirectory("graft-sink")
-    traces
+    val rows = traces
       .filter(col("model_id").isin(specs.map(_.modelId): _*))
-      .repartition(col("model_id"))
-      .sortWithinPartitions(col("model_id"), col("sim_id"))
-      .select(col("model_id"), concat_ws(",", col("trace")).as("value"))
-      .write.mode(SaveMode.Overwrite).partitionBy("model_id").text(tmp.toString)
+      .select(col("model_id"), col("sim_id"), concat_ws(",", col("trace")).cast("binary"))
+      .as(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.BINARY))
+      .collect()
+    val byModel = rows.groupBy(_._1).map { case (m, rs) => m -> rs.sortBy(_._2) }
     specs.foreach { s =>
-      val dir = tmp.resolve(s"model_id=${s.modelId}")
       val dest = Paths.get(s.resolvedOutputPath)
       Option(dest.getParent).foreach(Files.createDirectories(_))
-      if (Files.isDirectory(dir)) {
-        val listing = Files.list(dir)
-        val part =
-          try listing.filter(_.getFileName.toString.startsWith("part-"))
-            .findFirst().orElseThrow(() => new IllegalStateException(s"no part file in $dir"))
-          finally listing.close()
-        // COPY, not move: two specs may (ab)use the same modelId with
-        // different output paths — each must receive the file, as the old
-        // per-spec jobs produced
-        Files.copy(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      } else {
-        // a spec whose model has no rows in `traces`: dynamic partitionBy
-        // writes no directory for it — preserve the previous per-spec
-        // behavior (an empty output file) instead of failing the battery
-        Files.write(dest, Array.emptyByteArray)
-      }
+      val out = new BufferedOutputStream(Files.newOutputStream(dest), 1 << 16)
+      try byModel.get(s.modelId).foreach(_.foreach { r => out.write(r._3); out.write('\n') })
+      finally out.close()
     }
-    deleteRecursively(tmp)
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.isDirectory(p)) {
-      val listing = Files.list(p)
-      try listing.forEach(deleteRecursively(_))
-      finally listing.close()
-    }
-    Files.deleteIfExists(p)
   }
 }

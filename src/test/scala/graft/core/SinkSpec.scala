@@ -1,6 +1,11 @@
 package graft.core
 
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import graft.SparkTestBase
+import org.apache.spark.graftbridge.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Distributed sinks: per-model partitioned text (reference CSV format per
@@ -42,6 +47,45 @@ class SinkSpec extends SparkTestBase {
     val b = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(s"$tmp/b.csv"))
     assert(a.size == 4 && a == b)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(s"$tmp/none.csv")) == 0)
+  }
+
+  private def withPaths(dir: Path) =
+    specs.map(s => s.copy(outputPath = Some(s"$dir/${s.modelId}.txt")))
+
+  test("writeReferenceCsv orders rows by sim_id whatever order they arrive in") {
+    val traces = new MCBattery(spark).simulate(specs)
+    def written(name: String, df: DataFrame): Seq[Seq[Byte]] = {
+      val out = withPaths(Files.createTempDirectory(s"graft-csv-$name"))
+      TraceSink.writeReferenceCsv(df, out)
+      out.map(s => Files.readAllBytes(Paths.get(s.resolvedOutputPath)).toSeq)
+    }
+    val inOrder = written("inorder", traces)
+    assert(inOrder.map(f => f.count(_ == '\n')) == Seq(30, 20))
+    assert(written("repartitioned", traces.repartition(3)) == inOrder)
+    assert(written("shuffled", traces.orderBy(rand(7))) == inOrder)
+  }
+
+  test("writeReferenceCsv runs one shuffle-free job: one stage, no shuffle write") {
+    val out = withPaths(Files.createTempDirectory("graft-csv-stages"))
+    val traces = new MCBattery(spark).simulate(out)
+    val jobs = new AtomicInteger
+    val stages = new AtomicInteger
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        stages.incrementAndGet()
+        shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+      }
+    }
+    val sc = spark.sparkContext
+    ListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      TraceSink.writeReferenceCsv(traces, out)
+      ListenerBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert((jobs.get, stages.get, shuffleBytes.get) == ((1, 1, 0L)))
   }
 
   test("writeParquet round-trips the array column and partitions by model") {

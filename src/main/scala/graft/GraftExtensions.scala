@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.core.{CoinTrace, DeterministicRng}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.types.LongType
+import graft.core.{NativeTrace, RngFamily, RngUniform, TraceKernel}
 import graft.functions.{DotProduct, Md5Int60, WordShingles}
 
 /** SparkSessionExtensions entry point: registers the engine's native
@@ -25,6 +26,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     def arity(name: String, n: Int, args: Seq[Expression]): Unit =
       if (args.length != n)
         throw new IllegalArgumentException(s"$name expects $n arguments, got ${args.length}")
+    def long(e: Expression): Expression = Cast(e, LongType)
     e.injectFunction((FunctionIdentifier("graft_dot_product"),
       info("graft_dot_product", "_FUNC_(a, b) - dot product of two float/double arrays"),
       (args: Seq[Expression]) => { arity("graft_dot_product", 2, args); DotProduct(args(0), args(1)) }))
@@ -74,7 +76,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("graft_uniform", "_FUNC_(seed, model, sim, step) - deterministic counter-based uniform in [0,1)"),
       (args: Seq[Expression]) => {
         require(args.length == 4, s"graft_uniform expects 4 arguments, got ${args.length}")
-        DeterministicRng.uniformExpr(args(0), args(1), args(2), args(3))
+        RngUniform(long(args(0)), long(args(1)), long(args(2)), long(args(3)),
+          RngFamily.CounterHash.id)
       }))
     // every RNG family (4 real NumPy backends + CounterHash) from SQL; the
     // family name must be a literal so the dispatch constant-folds into the
@@ -87,11 +90,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => {
         require(args.length == 5, s"graft_rng_uniform expects 5 arguments, got ${args.length}")
         require(args.head.foldable, "graft_rng_uniform: family must be a string literal")
-        val family = core.RngFamily.fromName(Option(args.head.eval()).map(_.toString))
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.LongType
-        core.RngUniform(Cast(args(1), LongType), Cast(args(2), LongType),
-          Cast(args(3), LongType), Cast(args(4), LongType), family.id)
+        val family = RngFamily.fromName(Option(args.head.eval()).map(_.toString))
+        RngUniform(long(args(1)), long(args(2)), long(args(3)), long(args(4)), family.id)
       }))
     e.injectFunction((FunctionIdentifier("graft_coin_trace"),
       info("graft_coin_trace", "_FUNC_(seed, model, sim, points, bias) - H/T trace array"),
@@ -110,10 +110,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case i: java.lang.Integer => i.doubleValue()
           case other => throw new IllegalArgumentException(s"bias must be numeric, got $other")
         }
-        import org.apache.spark.sql.catalyst.expressions.Cast
-        import org.apache.spark.sql.types.LongType
-        CoinTrace(Cast(args(0), LongType), Cast(args(1), LongType),
-          Cast(args(2), LongType), points, bias, Nil)
+        NativeTrace(long(args(0)), long(args(1)), long(args(2)),
+          TraceKernel.Coin(points, bias, Nil, RngFamily.CounterHash.id))
       }))
     // write-side layout from SQL: the same bit-interleave LayoutOps.zorder16
     // plans (pure integer arithmetic, whole-stage codegen'd via the
@@ -125,9 +123,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "multi-dimensional min/max file pruning"),
       (args: Seq[Expression]) => {
         arity("graft_zorder16", 2, args)
-        import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Cast, Literal, ShiftLeft, ShiftRight}
-        import org.apache.spark.sql.types.LongType
-        val (x, y) = (Cast(args(0), LongType), Cast(args(1), LongType))
+        import org.apache.spark.sql.catalyst.expressions.{Add, BitwiseAnd, Literal, ShiftLeft, ShiftRight}
+        val (x, y) = (long(args(0)), long(args(1)))
         (0 until 16).map { b =>
           Add(
             ShiftLeft(BitwiseAnd(ShiftRight(x, Literal(b)), Literal(1L)), Literal(2 * b)),

@@ -1,8 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.expressions.{Expression => CatalystExpr}
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Counter-based deterministic uniform generator.
   *
@@ -19,13 +18,15 @@ import org.apache.spark.sql.catalyst.expressions.{Expression => CatalystExpr}
   * M = 2^31-1 with the "minimal standard" multiplier A = 48271, interleaved
   * with modular squarings for nonlinearity (plain Lehmer chains are affine in
   * the counter, which would correlate adjacent steps). Every intermediate
-  * value stays below 2^62, so the EXACT same formula is expressible in:
-  *   - Spark `Column` arithmetic (codegen'd, no UDF — see [[uniformCol]]),
-  *   - plain Scala ([[uniform]], the reference implementation), and
-  *   - DuckDB BIGINT SQL ([[uniformSql]]) — which is what lets even the
-  *     random simulation output be oracle-checked bit-for-bit: the final
-  *     division `h / 2147483647.0` is a single correctly-rounded IEEE-754
-  *     operation, identical across engines.
+  * value stays below 2^62, so the mix has exactly two implementations:
+  *   - plain Scala ([[hash]]/[[uniform]], the reference implementation), and
+  *   - DuckDB BIGINT SQL text ([[hashSql]]/[[uniformSql]]) — which is what
+  *     lets even the random simulation output be oracle-checked
+  *     bit-for-bit: the final division `h / 2147483647.0` is a single
+  *     correctly-rounded IEEE-754 operation, identical across engines.
+  * The Spark forms — [[uniformCol]] and the `graft_uniform` SQL function —
+  * are [[RngUniform]] at family CounterHash, whose generated code calls
+  * the Scala one.
   *
   * This generator is the engine-native [[RngFamily.CounterHash]] family;
   * the reference's four NumPy family names route per [[RngFamily]] (PCG64
@@ -69,45 +70,13 @@ object DeterministicRng {
     h
   }
 
-  /** Spark Column form — pure built-in arithmetic; stays inside
-    * whole-stage codegen (no UDF, no serialization boundary).
+  /** Spark Column form: [[RngUniform]] at family CounterHash — one
+    * generated-code call into [[hash]] per row, no UDF. Each counter is
+    * cast to bigint.
     */
-  def uniformCol(seed: Column, model: Column, sim: Column, step: Column): Column =
-    hashCol(seed, model, sim, step).cast("double") / lit(M.toDouble)
-
-  def hashCol(seed: Column, model: Column, sim: Column, step: Column): Column = {
-    def m(c: Column): Column = pmod(c.cast("long"), lit(M))
-    var h = m(seed)
-    h = (h * A + m(model) + lit(1L)) % M
-    h = (h * h) % M
-    h = (h * A + m(sim) + lit(1L)) % M
-    h = (h * h) % M
-    h = (h * A + m(step) + lit(1L)) % M
-    h = (h * h) % M
-    h = (h * A + lit(1L)) % M
-    h = (h * h) % M
-    h = (h * A) % M
-    h
-  }
-
-  /** Raw Catalyst-expression form — for SQL function registration
-    * (GraftExtensions), where the builder receives unresolved child
-    * Expressions and the Column API can't be round-tripped. Same chain as
-    * [[hashCol]]/[[hash]].
-    */
-  def uniformExpr(seed: CatalystExpr, model: CatalystExpr, sim: CatalystExpr,
-      step: CatalystExpr): CatalystExpr = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.{DoubleType, LongType}
-    def l(x: Long) = Literal(x)
-    def m(e: CatalystExpr) = Pmod(Cast(e, LongType), l(M))
-    var h: CatalystExpr = m(seed)
-    def mix(add: CatalystExpr): Unit = {
-      h = Remainder(Add(Add(Multiply(h, l(A)), m(add)), l(1L)), l(M))
-      h = Remainder(Multiply(h, h), l(M))
-    }
-    mix(model); mix(sim); mix(step); mix(l(0L))
-    Divide(Cast(Remainder(Multiply(h, l(A)), l(M)), DoubleType), Literal(M.toDouble))
+  def uniformCol(seed: Column, model: Column, sim: Column, step: Column): Column = {
+    def l(c: Column) = Bridge.expression(c.cast("long"))
+    Bridge.column(RngUniform(l(seed), l(model), l(sim), l(step), RngFamily.CounterHash.id))
   }
 
   /** The identical chain as SQL text (DuckDB-compatible; plain ANSI
@@ -143,8 +112,8 @@ object DeterministicRng {
   */
 trait UniformStream { def next(): Double }
 
-/** Static per-family dispatch — shared by the native generated-code
-  * kernels ([[McGenHelper]]), [[StepRng]] and anything else that draws.
+/** Static per-family dispatch — shared by the native trace kernels
+  * ([[TraceKernel]]), [[StepRng]] and anything else that draws.
   * `familyId` is [[RngFamily.id]]. Unknown ids FAIL — a silent
   * fallthrough to a default backend would hand a future mis-wired family
   * plausible-looking draws from the wrong generator.
@@ -155,7 +124,8 @@ trait UniformStream { def next(): Double }
   * LCG jump-ahead). The sequential families (SFC64, MT19937 — real
   * KAT-verified backends with no jump-ahead, see [[Sfc64]]/[[Mt19937]])
   * only exist as streams; their point-access [[uniform]] honestly costs
-  * O(step) by drawing forward from the stream head.
+  * O(step) by drawing forward from the stream head, and refuses a
+  * negative step (there is no draw before the head).
   */
 object Rngs {
   def uniform(familyId: Int, seed: Long, model: Long, sim: Long, step: Long): Double =
@@ -166,6 +136,8 @@ object Rngs {
       case 1 => Philox.uniform(seed, model, sim, step)
       case 4 => Pcg64.uniform(seed, model, sim, step)
       case 2 | 3 => // sequential designs: skip-ahead by iteration, O(step)
+        require(step >= 0, s"${if (familyId == 2) "SFC64" else "MT19937"} draws " +
+          s"forward from its stream head: step must be >= 0, got $step")
         val s = stream(familyId, seed, model, sim)
         var k = 0L
         while (k < step) { s.next(); k += 1 }

@@ -71,12 +71,7 @@ final class MCBattery(
 
   private def simulateResolved(rs: Seq[SimulationSpec],
       numPartitions: Option[Int], family: RngFamily): DataFrame = {
-    val offsets = rs.map(_.numberSimulations).scanLeft(0L)(_ + _) // len = n+1
-    val total = offsets.last
-    val parts = numPartitions.getOrElse(
-      math.max(spark.sparkContext.defaultParallelism, 1))
-
-    val base = spark.range(0, total, 1, math.min(parts.toLong, total).toInt)
+    val (base, offsets) = rows(rs, numPartitions)
     val id = col("id")
 
     // Global row id -> (model, sim) via a CASE chain over cumulative offsets;
@@ -107,10 +102,9 @@ final class MCBattery(
     import spark.implicits._
     require(specs.nonEmpty, "at least one simulation spec required")
     val rs = resolveSeeds(specs)
-    val offsets = rs.map(_.numberSimulations).scanLeft(0L)(_ + _)
-    val total = offsets.last
-    val parts = numPartitions.getOrElse(math.max(spark.sparkContext.defaultParallelism, 1))
-    val specArr = rs.toArray // small; serialized into the task closure
+    val (base, offsets) = rows(rs, numPartitions)
+    val offs = offsets.toArray // small, like specArr; serialized into the task closure
+    val specArr = rs.toArray
     // Resolve models ON THE DRIVER and ship the instances in the closure:
     // executor JVMs have a fresh ModelRegistry without any driver-side
     // register() calls, so a name lookup inside mapPartitions would fail on
@@ -120,10 +114,8 @@ final class MCBattery(
     // capture `this` (and its SparkSession) in the task closure
     val rngFamily = rng
 
-    spark.range(0, total, 1, math.min(parts.toLong, total).toInt)
-      .as[Long]
+    base.as[Long]
       .mapPartitions { ids =>
-        val offs = specArr.map(_.numberSimulations).scanLeft(0L)(_ + _)
         ids.map { gid =>
           val i = {
             var k = 0; while (gid >= offs(k + 1)) k += 1; k
@@ -139,6 +131,19 @@ final class MCBattery(
         }
       }
       .toDF("model_id", "sim_id", "trace")
+  }
+
+  /** The battery's row layout, shared by both tiers: one row per
+    * simulation, global ids `0 until Σ sims` split evenly over the
+    * partitions, plus the cumulative per-spec offsets (length specs + 1)
+    * that map a global id back to (spec, sim).
+    */
+  private def rows(rs: Seq[SimulationSpec],
+      numPartitions: Option[Int]): (org.apache.spark.sql.Dataset[java.lang.Long], Seq[Long]) = {
+    val offsets = rs.map(_.numberSimulations).scanLeft(0L)(_ + _)
+    val total = offsets.last
+    val parts = numPartitions.getOrElse(math.max(spark.sparkContext.defaultParallelism, 1))
+    (spark.range(0, total, 1, math.min(parts.toLong, total).toInt), offsets)
   }
 
   /** Per-model effective seeds: an explicit spec seed (>= 1; 0 is the

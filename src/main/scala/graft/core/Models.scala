@@ -58,13 +58,10 @@ object CoinSequence extends MCModel {
   def traceCol(n: Int, params: Seq[Double], start: Seq[String],
                seed: Column, modelId: Column, simId: Column,
                family: RngFamily = RngFamily.PCG64): Column = {
-    // Native codegen'd generator (see core.CoinTrace) — one loop per row
-    // instead of an interpreted per-point lambda; same counter-hash values.
-    import org.apache.spark.sql.graftbridge.Bridge
-    val bias = params.headOption.getOrElse(0.5)
-    Bridge.column(CoinTrace(
-      Bridge.expression(seed.cast("long")), Bridge.expression(modelId.cast("long")),
-      Bridge.expression(simId.cast("long")), n, bias, start, family.id))
+    // native loop (core.NativeTrace) — one kernel call per row instead of
+    // an interpreted per-point lambda; same values
+    NativeTrace.column(seed, modelId, simId,
+      TraceKernel.Coin(n, params.headOption.getOrElse(0.5), start, family.id))
   }
 
   def simulate(n: Int, rng: StepRng, params: Seq[Double], start: Seq[String]): Seq[String] = {
@@ -75,10 +72,8 @@ object CoinSequence extends MCModel {
 
 /** Integer random walk: position(t) = start + Σ_{i<=t} ±1, P(+1) = bias.
   * Values are exact integers formatted as strings (so the DuckDB oracle
-  * reproduces them bit-for-bit). Column tier computes each prefix sum with a
-  * fold over `sequence` — O(points²) uniform evaluations per trace, fine for
-  * MC batteries (many sims × few points); trace-length-heavy workloads should
-  * use the exploded long format + window cumsum instead.
+  * reproduces them bit-for-bit). Column tier: one cumulative loop per trace
+  * ([[TraceKernel.Walk]]).
   */
 object RandomWalk extends MCModel {
   val name = "random_walk"
@@ -86,14 +81,10 @@ object RandomWalk extends MCModel {
   def traceCol(n: Int, params: Seq[Double], start: Seq[String],
                seed: Column, modelId: Column, simId: Column,
                family: RngFamily = RngFamily.PCG64): Column = {
-    // Native codegen'd cumulative loop (core.WalkTrace); the composable form
-    // needed an O(n²) prefix-sum fold per trace.
-    import org.apache.spark.sql.graftbridge.Bridge
-    val bias = params.headOption.getOrElse(0.5)
-    val origin = start.headOption.map(_.toLong).getOrElse(0L)
-    Bridge.column(WalkTrace(
-      Bridge.expression(seed.cast("long")), Bridge.expression(modelId.cast("long")),
-      Bridge.expression(simId.cast("long")), n, bias, origin, family.id))
+    // native cumulative loop (core.NativeTrace); the composable form
+    // needed an O(n²) prefix-sum fold per trace
+    NativeTrace.column(seed, modelId, simId, TraceKernel.Walk(n,
+      params.headOption.getOrElse(0.5), start.headOption.map(_.toLong).getOrElse(0L), family.id))
   }
 
   def simulate(n: Int, rng: StepRng, params: Seq[Double], start: Seq[String]): Seq[String] = {
@@ -121,17 +112,13 @@ object GeometricBrownianMotion extends MCModel {
   def traceCol(n: Int, params: Seq[Double], start: Seq[String],
                seed: Column, modelId: Column, simId: Column,
                family: RngFamily = RngFamily.PCG64): Column = {
-    // Native codegen'd cumulative log-space loop (core.GbmTrace) — the
-    // composable transform/aggregate form re-folded the whole prefix per
-    // point: O(n²) uniform draws in interpreted lambdas. Same values.
-    import org.apache.spark.sql.graftbridge.Bridge
+    // native cumulative log-space loop (core.NativeTrace) — the composable
+    // transform/aggregate form re-folded the whole prefix per point: O(n²)
+    // uniform draws in interpreted lambdas. Same values.
     val (mu, sigma, dt) = p(params)
     val s0 = start.headOption.map(_.toDouble).getOrElse(100.0)
-    val drift = (mu - sigma * sigma / 2.0) * dt
-    val vol = sigma * math.sqrt(dt)
-    Bridge.column(GbmTrace(
-      Bridge.expression(seed.cast("long")), Bridge.expression(modelId.cast("long")),
-      Bridge.expression(simId.cast("long")), n, drift, vol, s0, family.id))
+    NativeTrace.column(seed, modelId, simId, TraceKernel.Gbm(n,
+      (mu - sigma * sigma / 2.0) * dt, sigma * math.sqrt(dt), s0, family.id))
   }
 
   def simulate(n: Int, rng: StepRng, params: Seq[Double], start: Seq[String]): Seq[String] = {

@@ -1,13 +1,16 @@
 package graft.core
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static generation kernel shared by interpreted eval and generated code.
+/** One model's native trace loop: its constants plus one
+  * `trace(seed, model, sim)` that builds the whole row.
   *
   * Each kernel opens ONE [[Rngs.stream]] per trace row and consumes draws
   * in step order — for the counter-based families this yields exactly the
@@ -17,79 +20,92 @@ import org.apache.spark.unsafe.types.UTF8String
   * generated inside one kernel invocation, so no cross-step stateless
   * access is ever needed.
   */
-object McGenHelper {
+sealed trait TraceKernel extends Serializable {
+  def points: Int
+  def trace(seed: Long, model: Long, sim: Long): ArrayData
+}
+
+object TraceKernel {
   private val H = UTF8String.fromString("H")
   private val T = UTF8String.fromString("T")
 
-  def coinTrace(seed: Long, model: Long, sim: Long, n: Int, bias: Double,
-      prefix: Array[UTF8String], familyId: Int): ArrayData = {
-    val out = new Array[Any](prefix.length + n)
-    var i = 0
-    while (i < prefix.length) { out(i) = prefix(i); i += 1 }
-    val rs = Rngs.stream(familyId, seed, model, sim)
-    var step = 0
-    while (step < n) {
-      out(prefix.length + step) = if (rs.next() < bias) H else T
-      step += 1
-    }
-    new GenericArrayData(out)
-  }
+  /** Coin flips after a verbatim prefix: 'H' iff the draw < bias. */
+  final case class Coin(points: Int, bias: Double, prefix: Seq[String], familyId: Int)
+      extends TraceKernel {
+    @transient private lazy val prefixArr: Array[UTF8String] =
+      prefix.map(UTF8String.fromString).toArray
 
-  /** GBM prices in one cumulative LOG-SPACE loop: acc += drift + vol·Z_t,
-    * point t = S₀·exp(acc), Z from Box-Muller over stream draws (2t, 2t+1)
-    * — the exact evaluation order of both the typed tier
-    * ([[graft.core.GeometricBrownianMotion.simulate]]) and the composable
-    * `transform(sequence, t -> exp(aggregate(...)))` form this replaces,
-    * which re-folded the whole prefix per point (O(n²) uniform draws in
-    * interpreted lambdas). Double.toString matches Spark's double→string
-    * cast, so traces are bit-identical across tiers (ModelTierSpec).
-    */
-  def gbmTrace(seed: Long, model: Long, sim: Long, n: Int, drift: Double,
-      vol: Double, s0: Double, familyId: Int): ArrayData = {
-    val out = new Array[Any](n)
-    val rs = Rngs.stream(familyId, seed, model, sim)
-    var acc = 0.0
-    var t = 0
-    while (t < n) {
-      val u1 = math.max(rs.next(), 1e-300)
-      val u2 = rs.next()
-      val z = math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
-      acc += drift + vol * z
-      out(t) = UTF8String.fromString(java.lang.Double.toString(s0 * math.exp(acc)))
-      t += 1
+    def trace(seed: Long, model: Long, sim: Long): ArrayData = {
+      val pre = prefixArr
+      val out = new Array[Any](pre.length + points)
+      System.arraycopy(pre, 0, out, 0, pre.length)
+      val rs = Rngs.stream(familyId, seed, model, sim)
+      var step = 0
+      while (step < points) {
+        out(pre.length + step) = if (rs.next() < bias) H else T
+        step += 1
+      }
+      new GenericArrayData(out)
     }
-    new GenericArrayData(out)
   }
 
   /** Random-walk positions in one cumulative loop (vs the O(n²) prefix-sum
     * fold of the composable form). Long.toString matches Spark's
     * long→string cast, so values are unchanged.
     */
-  def walkTrace(seed: Long, model: Long, sim: Long, n: Int, bias: Double,
-      origin: Long, familyId: Int): ArrayData = {
-    val out = new Array[Any](n)
-    val rs = Rngs.stream(familyId, seed, model, sim)
-    var pos = origin
-    var step = 0
-    while (step < n) {
-      pos += (if (rs.next() < bias) 1L else -1L)
-      out(step) = UTF8String.fromString(java.lang.Long.toString(pos))
-      step += 1
+  final case class Walk(points: Int, bias: Double, origin: Long, familyId: Int)
+      extends TraceKernel {
+    def trace(seed: Long, model: Long, sim: Long): ArrayData = {
+      val out = new Array[Any](points)
+      val rs = Rngs.stream(familyId, seed, model, sim)
+      var pos = origin
+      var step = 0
+      while (step < points) {
+        pos += (if (rs.next() < bias) 1L else -1L)
+        out(step) = UTF8String.fromString(java.lang.Long.toString(pos))
+        step += 1
+      }
+      new GenericArrayData(out)
     }
-    new GenericArrayData(out)
+  }
+
+  /** GBM prices in one cumulative LOG-SPACE loop: acc += drift + vol·Z_t,
+    * point t = S₀·exp(acc), Z from Box-Muller over stream draws (2t, 2t+1)
+    * — the exact evaluation order of the typed tier
+    * ([[graft.core.GeometricBrownianMotion.simulate]]). Double.toString
+    * matches Spark's double→string cast, so traces are bit-identical across
+    * tiers (ModelTierSpec).
+    */
+  final case class Gbm(points: Int, drift: Double, vol: Double, s0: Double, familyId: Int)
+      extends TraceKernel {
+    def trace(seed: Long, model: Long, sim: Long): ArrayData = {
+      val out = new Array[Any](points)
+      val rs = Rngs.stream(familyId, seed, model, sim)
+      var acc = 0.0
+      var t = 0
+      while (t < points) {
+        val u1 = math.max(rs.next(), 1e-300)
+        val u2 = rs.next()
+        val z = math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.Pi * u2)
+        acc += drift + vol * z
+        out(t) = UTF8String.fromString(java.lang.Double.toString(s0 * math.exp(acc)))
+        t += 1
+      }
+      new GenericArrayData(out)
+    }
   }
 }
 
-/** Native coin-trace generator: the whole trace (starting point + n flips)
-  * in one tight loop per row, inside codegen. Replaces the
-  * `transform(sequence(...), step -> CASE WHEN uniform < bias ...)` form,
-  * whose lambda is interpreted per point. Values are identical (same
-  * counter-hash per (seed, model, sim, step)), so the DuckDB trace oracle is
-  * unchanged — asserted by sim_coin_traces in the correctness gate.
+/** Native trace generator: one [[TraceKernel]] call per row, inside
+  * whole-stage codegen. Interpreted eval and generated code run the same
+  * `kernel.trace` (codegen reaches it through a reference object), so the
+  * two paths cannot drift apart. Replaces the composable
+  * `transform(sequence(...), ...)` forms, whose lambdas were interpreted
+  * per point; values are identical, so the DuckDB trace oracle is unchanged
+  * (sim_coin_traces in the correctness gate).
   */
-case class CoinTrace(seed: Expression, model: Expression, sim: Expression,
-    numberPoints: Int, bias: Double, prefix: Seq[String], familyId: Int = 0)
-  extends TernaryExpression {
+case class NativeTrace(seed: Expression, model: Expression, sim: Expression,
+    kernel: TraceKernel) extends TernaryExpression {
 
   override def first: Expression = seed
   override def second: Expression = model
@@ -99,25 +115,17 @@ case class CoinTrace(seed: Expression, model: Expression, sim: Expression,
   override def nullIntolerant: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(seed, model, sim).forall(_.dataType == LongType) && numberPoints >= 1)
+    if (Seq(seed, model, sim).forall(_.dataType == LongType) && kernel.points >= 1)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"coin_trace expects (bigint, bigint, bigint) counters, points >= 1")
-
-  @transient private lazy val prefixArr: Array[UTF8String] =
-    prefix.map(UTF8String.fromString).toArray
+      "native trace expects (bigint, bigint, bigint) counters, points >= 1")
 
   override protected def nullSafeEval(s: Any, m: Any, si: Any): Any =
-    McGenHelper.coinTrace(s.asInstanceOf[Long], m.asInstanceOf[Long],
-      si.asInstanceOf[Long], numberPoints, bias, prefixArr, familyId)
+    kernel.trace(s.asInstanceOf[Long], m.asInstanceOf[Long], si.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val pref = ctx.addReferenceObj("prefix", prefixArr,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, (s, m, si) => {
-      s"${ev.value} = graft.core.McGenHelper.coinTrace($s, $m, $si, " +
-        s"$numberPoints, ${bias}D, $pref, $familyId);"
-    })
+    val k = ctx.addReferenceObj("kernel", kernel, kernel.getClass.getName)
+    nullSafeCodeGen(ctx, ev, (s, m, si) => s"${ev.value} = $k.trace($s, $m, $si);")
   }
 
   override protected def withNewChildrenInternal(
@@ -125,70 +133,11 @@ case class CoinTrace(seed: Expression, model: Expression, sim: Expression,
     copy(seed = newFirst, model = newSecond, sim = newThird)
 }
 
-/** Native geometric-Brownian-motion generator (see [[McGenHelper.gbmTrace]]). */
-case class GbmTrace(seed: Expression, model: Expression, sim: Expression,
-    numberPoints: Int, drift: Double, vol: Double, s0: Double, familyId: Int = 0)
-  extends TernaryExpression {
-
-  override def first: Expression = seed
-  override def second: Expression = model
-  override def third: Expression = sim
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(seed, model, sim).forall(_.dataType == LongType) && numberPoints >= 1)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"gbm_trace expects (bigint, bigint, bigint) counters, points >= 1")
-
-  override protected def nullSafeEval(s: Any, m: Any, si: Any): Any =
-    McGenHelper.gbmTrace(s.asInstanceOf[Long], m.asInstanceOf[Long],
-      si.asInstanceOf[Long], numberPoints, drift, vol, s0, familyId)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, m, si) => {
-      s"${ev.value} = graft.core.McGenHelper.gbmTrace($s, $m, $si, " +
-        s"$numberPoints, ${drift}D, ${vol}D, ${s0}D, $familyId);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(seed = newFirst, model = newSecond, sim = newThird)
-}
-
-/** Native random-walk generator (see [[McGenHelper.walkTrace]]). */
-case class WalkTrace(seed: Expression, model: Expression, sim: Expression,
-    numberPoints: Int, bias: Double, startPos: Long, familyId: Int = 0)
-  extends TernaryExpression {
-
-  override def first: Expression = seed
-  override def second: Expression = model
-  override def third: Expression = sim
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(seed, model, sim).forall(_.dataType == LongType) && numberPoints >= 1)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"walk_trace expects (bigint, bigint, bigint) counters, points >= 1")
-
-  override protected def nullSafeEval(s: Any, m: Any, si: Any): Any =
-    McGenHelper.walkTrace(s.asInstanceOf[Long], m.asInstanceOf[Long],
-      si.asInstanceOf[Long], numberPoints, bias, startPos, familyId)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (s, m, si) => {
-      s"${ev.value} = graft.core.McGenHelper.walkTrace($s, $m, $si, " +
-        s"$numberPoints, ${bias}D, ${startPos}L, $familyId);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(seed = newFirst, model = newSecond, sim = newThird)
+object NativeTrace {
+  /** Column form over any counter columns (cast to bigint). */
+  def column(seed: Column, model: Column, sim: Column, kernel: TraceKernel): Column =
+    Bridge.column(NativeTrace(Bridge.expression(seed.cast("long")),
+      Bridge.expression(model.cast("long")), Bridge.expression(sim.cast("long")), kernel))
 }
 
 /** Native per-family uniform draw — the SQL-surface form of

@@ -75,15 +75,12 @@ object SimQueries {
     * steps 12t..12t+11, minus the 6·32768 mean. Shared by sim_nwalk_final
     * and sim_gbm_logret.
     *
-    * Deliberately the `aggregate(sequence(0,11), ...)` fold, NOT a 12-way
-    * unrolled sum: measured head-to-head (sf0.1 workload, noop sink), the
-    * unroll is ~2× SLOWER warm and ~3× cold — inlining twelve ~50-op
-    * uniform chains (each re-evaluating the seed CASE and casts; codegen
-    * does no CSE across them) explodes the generated method, while the
-    * fold evaluates one compact compiled tree 12 times. The repo's HOF
-    * trap is about per-row lambdas over exploded strings, not short
-    * numeric folds. Long addition is exact either way, so the two forms
-    * are value-identical.
+    * The `aggregate(sequence(0,11), ...)` fold states the twelve draws
+    * once: the seed CASE and the counter casts appear in the plan one
+    * time, where a 12-way unrolled sum would copy them twelve times. The
+    * repo's HOF trap is about per-row lambdas over exploded strings, not
+    * short numeric folds. Long addition is exact either way, so the two
+    * forms are value-identical.
     */
   private def zUnitsCol(seedCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     aggregate(sequence(lit(0), lit(11)), lit(0L), (acc, j) =>
@@ -587,7 +584,7 @@ object SimQueries {
 
     "sim_gbm_stats" -> {
       // drift/vol embedded as exact round-tripping double literals; the
-      // Box-Muller/exp chain mirrors core.McGenHelper.gbmTrace term for term
+      // Box-Muller/exp chain mirrors core.TraceKernel.Gbm term for term
       def dv(mu: Double, sigma: Double): (String, String) = {
         val dt = 1.0 / 252
         (((mu - sigma * sigma / 2.0) * dt).toString, (sigma * math.sqrt(dt)).toString)

@@ -22,12 +22,17 @@ class FunctionsSpec extends SparkTestBase {
           |       graft_md5int60('hello') AS h,
           |       size(graft_word_shingles('a b c d', 3)) AS ns,
           |       graft_uniform(42L, 0L, 7L, 3L) AS u,
-          |       graft_coin_trace(42L, 0L, 0L, 4, 0.5) AS ct""".stripMargin).collect()(0)
+          |       graft_coin_trace(42L, 0L, 0L, 4, 0.5) AS ct,
+          |       graft_uniform(42L, -3L, 7L, 3L) AS un,
+          |       graft_rng_uniform('CounterHash', 42L, -3L, 7L, 3L) AS chn""".stripMargin).collect()(0)
       assert(r.getDouble(0) == 11.0)
       // md5('hello') = 5d41402abc4b2a76...; top 60 bits = 0x5d41402abc4b2a7
       assert(r.getLong(1) == java.lang.Long.parseLong("5d41402abc4b2a7", 16))
       assert(r.getInt(2) == 2)
       assert(r.getDouble(3) == graft.core.DeterministicRng.uniform(42, 0, 7, 3))
+      // a negative counter: both SQL forms fold it exactly like the Scala hash
+      assert(r.getDouble(5) == graft.core.DeterministicRng.uniform(42, -3, 7, 3))
+      assert(r.getDouble(6) == r.getDouble(5))
       // SQL zorder equals the LayoutOps column form on a known interleave:
       // x=3 (bits 0,1), y=5 (bits 0,2) -> z = 1+4 | 2+32 = 39
       val z = ext.sql("SELECT graft_zorder16(3, 5) AS z").collect()(0).getLong(0)

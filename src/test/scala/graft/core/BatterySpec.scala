@@ -142,6 +142,64 @@ class BatterySpec extends SparkTestBase {
     // unknown family ids fail fast instead of silently drawing from a
     // fallback backend
     intercept[IllegalArgumentException] { Rngs.uniform(99, 7L, 0L, 0L, 0L) }
+    // the sequential families draw forward from the stream head: a negative
+    // step has no draw and must not alias step 0
+    for (fam <- Seq(RngFamily.SFC64, RngFamily.MT19937)) {
+      val e = intercept[IllegalArgumentException] { Rngs.uniform(fam.id, 42L, 0L, 7L, -1L) }
+      assert(e.getMessage.contains(fam.name) && e.getMessage.contains("-1"), e.getMessage)
+    }
+  }
+
+  test("uniformCol equals the Scala counter hash, negative and >= M counters included") {
+    import spark.implicits._
+    val m = DeterministicRng.M
+    val grid = spark.range(0, 240).select(expr("id % 4").as("seed"),
+      expr("id div 4 % 5").as("model"), expr("id div 20").as("sim"), expr("id % 7").as("step"))
+    // each edge value in each counter position exercises the pmod fold
+    val edges = for (e <- Seq(-1L, -12345L, -m, m, m + 1, 3 * m + 11, Long.MaxValue, Long.MinValue);
+        k <- 0 until 4) yield {
+      val c = Array(42L, 3L, 5L, 9L); c(k) = e; (c(0), c(1), c(2), c(3))
+    }
+    val rows = grid.union(edges.toDF("seed", "model", "sim", "step"))
+      .select($"seed", $"model", $"sim", $"step",
+        DeterministicRng.uniformCol($"seed", $"model", $"sim", $"step"))
+      .collect()
+    assert(rows.length == 240 + edges.size)
+    rows.foreach { r =>
+      val want = DeterministicRng.uniform(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
+      assert(r.getDouble(4) == want, r.toString)
+    }
+  }
+
+  test("NativeTrace: interpreted eval equals the battery's generated code, every kernel and family") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val start = Seq("T", "T", "T", "T", "T")
+    val (mu, sigma, dt) = (0.05, 0.2, 1.0 / 252)
+    val specs = Seq(
+      SimulationSpec(0, "coin_sequence", 3, 6, Seq(0.6), Nil, 42),
+      SimulationSpec(1, "coin_sequence", 3, 6, Seq(0.4), start, 43),
+      SimulationSpec(2, "random_walk", 3, 6, Seq(0.55), Seq("10"), 44),
+      SimulationSpec(3, "gbm", 3, 6, Seq(mu, sigma, dt), Seq("50.0"), 45))
+    for (fam <- RngFamily.all :+ RngFamily.Antithetic(RngFamily.Philox)) {
+      val kernels = Seq[TraceKernel](
+        TraceKernel.Coin(6, 0.6, Nil, fam.id),
+        TraceKernel.Coin(6, 0.4, start, fam.id),
+        TraceKernel.Walk(6, 0.55, 10L, fam.id),
+        TraceKernel.Gbm(6, (mu - sigma * sigma / 2.0) * dt, sigma * math.sqrt(dt), 50.0, fam.id))
+      val rows = new MCBattery(spark, fam).simulate(specs).collect()
+      assert(rows.length == 12)
+      rows.foreach { r =>
+        val (model, sim) = (r.getInt(0), r.getLong(1))
+        // the battery folds the family salt into each spec's seed
+        val seed = specs(model).seed + fam.salt
+        val evaluated = NativeTrace(Literal(seed), Literal(model.toLong), Literal(sim),
+          kernels(model)).eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+          .toSeq[UTF8String](StringType).map(_.toString)
+        assert(evaluated == r.getSeq[String](2), s"${fam.name} model $model sim $sim")
+      }
+    }
   }
 
   test("all five families: tiers identical, streams pairwise distinct") {

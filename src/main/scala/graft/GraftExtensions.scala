@@ -4,11 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.LongType
-import graft.core.{NativeTrace, RngFamily, RngUniform, TraceKernel}
+import graft.core.{NativeTrace, NativeTraceLines, RngFamily, RngUniform, TraceKernel}
 import graft.functions.{DotProduct, Md5Int60, WordShingles}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions, so `spark.sql` users get them too:
+  * expressions as SQL functions, so `spark.sql` users get them too, and
+  * the [[graft.core.NativeTraceLines]] optimizer rule:
   *
   * {{{
   * SparkSession.builder()
@@ -27,6 +28,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       if (args.length != n)
         throw new IllegalArgumentException(s"$name expects $n arguments, got ${args.length}")
     def long(e: Expression): Expression = Cast(e, LongType)
+    e.injectOptimizerRule(_ => NativeTraceLines)
     e.injectFunction((FunctionIdentifier("graft_dot_product"),
       info("graft_dot_product", "_FUNC_(a, b) - dot product of two float/double arrays"),
       (args: Seq[Expression]) => { arity("graft_dot_product", 2, args); DotProduct(args(0), args(1)) }))

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.{MCBattery, RngFamily, SimulationSpec, TraceSink}
 import graft.operators.{DedupOps, SimilarityOps}
 
 /** Standalone scale-stress measurement (NOT part of the correctness gate —
-  * timings are not oracleable). Two modes:
+  * timings are not oracleable). The default mode:
   *
   * `corpus10x` (default): materializes a 10× corpus from the sf tables —
   * ten copies with shifted ids, where text is per-copy letter-substituted
@@ -20,12 +19,6 @@ import graft.operators.{DedupOps, SimilarityOps}
   * near-pairs at threshold 0.9 at BOTH scales — the regime the LSH op
   * exists for — so the crossover (exact grows ~quadratically, blocked
   * ~linearly) is bench-visible, not just spec-asserted.
-  *
-  * `simdemo`: the reference's own demo scale (BASELINE.md workloads A+B:
-  * 100k×16 fair coin + 60k×32 biased coin = 160k traces, ≈3.5 M points,
-  * Philox) generated AND written through the reference-parity CSV sink,
-  * wall-clock on the session master (run with SPARK_GRAFT_CPUS=4 to match
-  * the baseline's local[4] row).
   *
   * Results are recorded in BENCHNOTES.md.
   */
@@ -773,35 +766,6 @@ object ScaleBench {
     println(f"[scale] dd_clusters_star fitted exponent: ${fitSlope(starPts)}%.2f")
   }
 
-  /** `mult = 1` is the reference's own demo scale (BASELINE.md A+B);
-    * `mult = 10` (1.6 M traces, ≈35 M points) is the linearity point —
-    * the Range→Project generation plan is scale-invariant (PlanSpec pins
-    * the 10× shape: no Exchange at any trace count), so wall-clock should
-    * track points generated.
-    */
-  private def runSimDemo(spark: SparkSession, mult: Int = 1): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-simdemo")
-    val specs = Seq(
-      SimulationSpec(0, "coin_sequence", 100000L * mult, 16, Seq(0.5), Nil, 42,
-        Some(s"$tmp/0.txt")),
-      SimulationSpec(1, "coin_sequence", 60000L * mult, 32, Seq(0.7), Nil, 43,
-        Some(s"$tmp/1.txt")))
-    // one throwaway mini-run to absorb JIT/codegen so the measured number
-    // is the engine, not first-query session cost
-    val warm = specs.map(s => s.copy(numberSimulations = 100L,
-      outputPath = Some(s"$tmp/warm_${s.modelId}.txt")))
-    TraceSink.writeReferenceCsv(
-      new MCBattery(spark, RngFamily.Philox).simulate(warm), warm)
-    val t0 = System.nanoTime()
-    TraceSink.writeReferenceCsv(
-      new MCBattery(spark, RngFamily.Philox).simulate(specs), specs)
-    val sec = (System.nanoTime() - t0) / 1e9
-    val pts = specs.map(s => s.numberSimulations * (s.numberPoints + s.startingPoint.size)).sum
-    println(f"[simdemo] workloads A+B: ${specs.map(_.numberSimulations).sum}%,d traces, " +
-      f"$pts%,d points, generated+written in $sec%.2f s on ${spark.sparkContext.master}")
-    println(f"""{"metric":"simdemo","mult":$mult,"traces":${specs.map(_.numberSimulations).sum},"points":$pts,"sec":$sec%.3f,"master":"${spark.sparkContext.master}"}""")
-  }
-
   /** Bucketed-layout payoff: the SAME join+agg on the bucket key, read from
     * plain parquet (shuffle both sides every query) vs tables written once
     * with [[graft.operators.LayoutOps.writeBucketed]] (exchange-free SMJ).
@@ -913,8 +877,6 @@ object ScaleBench {
     mode match {
       case "corpus10x" => runCorpus10x(spark, sfDir)
       case "curve" => runCurve(spark, sfDir)
-      case "simdemo" => runSimDemo(spark)
-      case "simdemo10x" => runSimDemo(spark, mult = 10)
       case "bucketed" => runBucketed(spark, sfDir)
       case "ivfcompact" => runIvfCompact(spark, sfDir)
       // corpus build only (all five fact tables), for running the FULL
@@ -927,7 +889,7 @@ object ScaleBench {
         val copies = args(2).toInt
         buildCorpus(spark, sfDir, outDir, copies = copies)
       case other =>
-        sys.error(s"unknown mode $other (corpus10x | curve | simdemo | simdemo10x | bucketed | ivfcompact | build)")
+        sys.error(s"unknown mode $other (corpus10x | curve | bucketed | ivfcompact | build)")
     }
     spark.stop()
   }

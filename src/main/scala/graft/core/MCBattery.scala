@@ -31,6 +31,10 @@ final class MCBattery(
     rng: RngFamily = RngFamily.PCG64,
     masterSeed: Option[Long] = None) {
 
+  // sinks that only want CSV lines get them from the kernel (the rule
+  // rewrites only the plans it matches; see NativeTraceLines)
+  NativeTraceLines.install(spark)
+
   /** Column-tier simulate: the scale path.
     * Returns `DataFrame(model_id INT, sim_id BIGINT, trace ARRAY<STRING>)` —
     * the long-format shape all downstream analytics build on (SURVEY §1.3).

@@ -22,6 +22,10 @@ final case class SimulationSpec(
     outputPath: Option[String] = None) {
   require(numberSimulations >= 1, s"number_simulations must be >= 1, got $numberSimulations")
   require(numberPoints >= 1, s"number_points must be >= 1, got $numberPoints")
+  // the reference types starting_point as List[str] (models.py); a null
+  // element has no CSV form and no array<string> slot
+  require(!startingPoint.contains(null),
+    s"starting_point elements must be non-null, got null at index ${startingPoint.indexOf(null)}")
   // seed = 0 is the "auto" sentinel: MCBattery assigns one (from masterSeed
   // when set, else fresh random, matching the reference's unseeded draws).
   // Pass any seed >= 1 for an explicit reproducible stream.

@@ -14,6 +14,12 @@ import org.apache.spark.sql.functions._
   * [[writePartitionedText]] / [[writeParquet]], which keep the write fully
   * distributed (one directory per model via `partitionBy`, no single-file
   * bottleneck — the right shape for a 100 TB run).
+  *
+  * The text and parity sinks want only each trace's CSV line. When they are
+  * fed by [[MCBattery.simulate]], the [[NativeTraceLines]] optimizer rule
+  * (installed by `MCBattery`) turns their `concat_ws(',', trace)` into
+  * [[NativeTraceLine]], so the kernel writes the line's bytes directly and
+  * no `array<string>` is built. [[writeParquet]] keeps the array.
   */
 object TraceSink {
 

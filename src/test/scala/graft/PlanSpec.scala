@@ -222,8 +222,79 @@ class PlanSpec extends SparkTestBase {
     assert(p.contains("*("), p)
   }
 
+  /** Every query the body runs, as (optimized logical plan, executed plan). */
+  private def queriesOf(body: => Unit): Seq[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, String)] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.graftbridge.ListenerBus
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    ListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try { body; ListenerBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.map(qe => (qe.optimizedPlan, qe.executedPlan.toString))
+  }
+
+  private def has[T](plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)(
+      implicit ct: scala.reflect.ClassTag[T]): Boolean =
+    plan.exists(_.expressions.exists(_.exists(ct.runtimeClass.isInstance)))
+
+  test("trace-line rule fires for the text and parity sinks over simulate, and nowhere else") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Project, Range}
+    import graft.core.{MCBattery, NativeTrace, NativeTraceLine, SimulationSpec, TraceSink}
+    val tmp = java.nio.file.Files.createTempDirectory("graft-line-rule")
+    val specs = Seq(
+      SimulationSpec(0, "coin_sequence", 20, 5, Seq(0.5), Nil, 42, Some(s"$tmp/0.txt")),
+      SimulationSpec(1, "coin_sequence", 10, 4, Seq(0.7), Seq("T", "H"), 43, Some(s"$tmp/1.txt")),
+      SimulationSpec(2, "random_walk", 10, 4, Seq(0.5), Nil, 44, Some(s"$tmp/2.txt")))
+    val traces = new MCBattery(spark).simulate(specs)
+    for ((sink, write) <- Seq[(String, () => Unit)](
+        "text" -> (() => TraceSink.writePartitionedText(traces, s"$tmp/text")),
+        "refcsv" -> (() => TraceSink.writeReferenceCsv(traces, specs)))) {
+      val qs = queriesOf(write()).filter { case (p, _) => has[NativeTraceLine](p) || has[NativeTrace](p) }
+      assert(qs.size == 1, s"$sink: ${qs.map(_._1)}")
+      val (p, exec) = qs.head
+      assert(has[NativeTraceLine](p) && !has[NativeTrace](p), s"$sink:\n$p")
+      assert(p.collectLeaves().forall(_.isInstanceOf[Range]) && p.exists(_.isInstanceOf[Project]),
+        s"$sink:\n$p")
+      assert(exec.contains("Range") && !exec.contains("Exchange"), s"$sink:\n$exec")
+    }
+    val parquet = queriesOf(TraceSink.writeParquet(traces, s"$tmp/parquet")).map(_._1)
+    assert(parquet.exists(has[NativeTrace](_)) && !parquet.exists(has[NativeTraceLine](_)),
+      parquet.mkString("\n"))
+    for (sep <- Seq(" ", ";")) {
+      val p = traces.select(concat_ws(sep, col("trace"))).queryExecution.optimizedPlan
+      assert(has[NativeTrace](p) && !has[NativeTraceLine](p), s"separator '$sep':\n$p")
+    }
+    // the array is needed anyway: the trace is not inlined, so no rewrite
+    val both = traces.select(col("trace"), concat_ws(",", col("trace"))).queryExecution.optimizedPlan
+    assert(has[NativeTrace](both) && !has[NativeTraceLine](both), both.toString)
+  }
+
+  test("trace-line rule keeps concat_ws's '' for a NULL trace") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CaseWhen, ConcatWs, Literal}
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    import org.apache.spark.sql.types.LongType
+    import graft.core.{NativeTrace, NativeTraceLine, NativeTraceLines, RngFamily, TraceKernel}
+    val kernel = TraceKernel.Coin(4, 0.5, Nil, RngFamily.PCG64.id)
+    val unmatched = CaseWhen(Seq(Literal(false) -> NativeTrace(Literal(1L), Literal(0L), Literal(0L), kernel)))
+    val nullCounter = NativeTrace(Literal(null, LongType), Literal(0L), Literal(0L), kernel)
+    for (array <- Seq(unmatched, nullCounter)) {
+      val before = ConcatWs(Seq(Literal(","), array))
+      val after = NativeTraceLines(Project(Seq(Alias(before, "v")()), OneRowRelation()))
+        .expressions.head
+      assert(after.exists(_.isInstanceOf[NativeTraceLine]), after.toString)
+      assert(before.eval().toString == "" && after.eval().toString == "", after.toString)
+    }
+  }
+
   test("simulation plan shape is scale-invariant: 10x traces stay Range -> Project, shuffle-free") {
-    // The scale pin behind ScaleBench's simdemo10x row: the generation
+    // The scale pin behind the 10x demo measurements: the generation
     // plan for 1.6M traces (10x the reference demo) is the SAME
     // Range -> whole-stage-codegen Project with zero exchanges — trace
     // count only widens the Range, it never introduces a shuffle, so the

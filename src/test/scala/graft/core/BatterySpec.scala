@@ -93,6 +93,13 @@ class BatterySpec extends SparkTestBase {
     intercept[IllegalArgumentException] { SimulationSpec(0, "coin_sequence", 5, 0) }
   }
 
+  test("a null starting-point element is refused, naming its index (models.py List[str])") {
+    val e = intercept[IllegalArgumentException] {
+      SimulationSpec(0, "coin_sequence", 3, 4, Seq(0.5), Seq("T", null, ""), 11)
+    }
+    assert(e.getMessage.contains("index 1"), e.getMessage)
+  }
+
   test("unknown model fails fast (deviation from reference's swallowed KeyError)") {
     intercept[IllegalArgumentException] {
       battery.simulate(Seq(SimulationSpec(0, "no_such_model", 1, 1))).collect()
@@ -199,6 +206,54 @@ class BatterySpec extends SparkTestBase {
           .toSeq[UTF8String](StringType).map(_.toString)
         assert(evaluated == r.getSeq[String](2), s"${fam.name} model $model sim $sim")
       }
+    }
+  }
+
+  test("NativeTraceLine: line = joined trace, eval = the sinks' generated code, rule off byte-identical") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val start = Seq("T", "", "\u00e9", "H")
+    val (mu, sigma, dt) = (0.05, 0.2, 1.0 / 252)
+    val specs = Seq(
+      SimulationSpec(0, "coin_sequence", 3, 6, Seq(0.6), Nil, 42),
+      SimulationSpec(1, "coin_sequence", 3, 6, Seq(0.4), start, 43),
+      SimulationSpec(2, "random_walk", 3, 6, Seq(0.55), Seq("-7"), 44),
+      SimulationSpec(3, "gbm", 3, 6, Seq(mu, sigma, dt), Seq("1e-5"), 45))
+    val x = spark.experimental
+    for (fam <- RngFamily.all :+ RngFamily.Antithetic(RngFamily.Philox)) {
+      val kernels = Seq[TraceKernel](
+        TraceKernel.Coin(6, 0.6, Nil, fam.id),
+        TraceKernel.Coin(6, 0.4, start, fam.id),
+        TraceKernel.Walk(6, 0.55, -7L, fam.id),
+        TraceKernel.Gbm(6, (mu - sigma * sigma / 2.0) * dt, sigma * math.sqrt(dt), 1e-5, fam.id))
+      val mc = new MCBattery(spark, fam)
+      def lines(): (Map[(Int, Long), Seq[Byte]], String) = {
+        val df = mc.simulate(specs)
+          .select(col("model_id"), col("sim_id"), concat_ws(",", col("trace")).cast("binary"))
+        (df.collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getAs[Array[Byte]](2).toSeq).toMap,
+          df.queryExecution.optimizedPlan.toString)
+      }
+      val (withRule, planOn) = lines()
+      x.extraOptimizations = x.extraOptimizations.filterNot(_ == NativeTraceLines)
+      val (withoutRule, planOff) = try lines() finally NativeTraceLines.install(spark)
+      assert(planOn.contains("nativetraceline") && !planOff.contains("nativetraceline"), planOn)
+      assert(withRule.size == 12 && withoutRule == withRule, fam.name)
+      withRule.foreach { case ((model, sim), bytes) =>
+        val seed = specs(model).seed + fam.salt
+        val k = kernels(model)
+        val line = k.line(seed, model.toLong, sim)
+        assert(line.toString ==
+          k.trace(seed, model.toLong, sim).toSeq[UTF8String](StringType).mkString(","),
+          s"${fam.name} model $model sim $sim")
+        val evaluated = NativeTraceLine(Literal(seed), Literal(model.toLong), Literal(sim), k)
+          .eval().asInstanceOf[UTF8String]
+        assert(evaluated == line && line.getBytes.toSeq == bytes, s"${fam.name} model $model sim $sim")
+      }
+      val text = withRule.map { case (k, b) => k -> new String(b.toArray, "UTF-8") }
+      assert(text((1, 0L)).startsWith("T,,\u00e9,H,"), text((1, 0L)))
+      assert(text((2, 0L)).startsWith("-"), text((2, 0L)))
+      assert(text((3, 0L)).contains("E-"), text((3, 0L)))
     }
   }
 

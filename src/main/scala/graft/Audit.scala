@@ -48,14 +48,7 @@ object Audit {
   def main(args: Array[String]): Unit = {
     if (args.headOption.contains("--card")) { runCard(args.drop(1)); return }
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(8), 8)
 
     def t(name: String) = Tables.t(spark, sfDir, name)
 
@@ -370,14 +363,7 @@ object Audit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cardRoot = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-card").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(8), 8)
     val card = buildCard(spark, sfDir).localCheckpoint()
     val v = graft.sources.SnapshotStore.publish(card, cardRoot,
       concat_ws(":", col("section"), col("source"), col("metric")))
@@ -385,7 +371,7 @@ object Audit {
       .orderBy("section").collect().foreach { r =>
         println(s"""{"card_section":"${r.getString(0)}","rows":${r.getLong(1)}}""")
       }
-    println(s"""{"card":"published","root":"$cardRoot","version":$v,"rows":${card.count()}}""")
+    println(s"""{"card":"published","root":"${CliJson.str(cardRoot)}","version":$v,"rows":${card.count()}}""")
     spark.stop()
   }
 }

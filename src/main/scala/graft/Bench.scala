@@ -3,20 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM (codegen JIT) and the page cache for the parquet inputs
-    // so the first measured query doesn't absorb one-time session cost.
-    spark.range(0, 1000000).selectExpr("sum(id)").collect()
-    Seq("lineitem", "orders", "customer", "events", "documents", "embeddings")
-      .foreach(t => spark.read.parquet(s"$sfDir/$t.parquet").count())
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
+    Measure.warm(spark, sfDir, Measure.BatteryTables)
     // Optional comma-separated filter for controlled A/B runs of a few
     // queries (BENCHNOTES discipline: same-session min-of-two pairs).
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -36,18 +25,10 @@ object Bench {
         ((s: SparkSession, _: String) => s.range(1).toDF())).toMap)
       .getOrElse(Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame])
     val results = padded.map { case (name, fn) =>
-      // Materialize EVERY column via the noop sink: .count() would let
-      // Catalyst prune unreferenced projections/windows and skip final
-      // sorts, under-measuring queries whose work lives in the projection
-      // (trace generation, string ops, thumbnails).
       // stderr progress marker (stdout stays reserved for the driver's
       // tail-parsed JSON): identifies a hung/grinding query immediately
       System.err.println(s"[bench] running $name")
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      def once(): Double = Measure.seconds(Measure.noop(fn(spark, sfDir)))
       // Each query is timed TWICE and the min reported: single-run timings
       // showed 3-4x one-off spikes (GC pause / page-cache eviction lands
       // entirely on one query) that polluted round totals — see BENCHNOTES.
@@ -118,26 +99,28 @@ object Bench {
     val slowest = mins.toSeq.sortBy(-_._2).take(8)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"runs":2,"worst_run_total":${fmt(worstTotal)},"spike_ratios":$spikes,"failed":$failedJson,"slowest":$slowest,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},"runs":2,"worst_run_total":${fmt(worstTotal)},"spike_ratios":$spikes,"failed":$failedJson,"slowest":$slowest,"sf":"${CliJson.str(sfDir)}"}"""
     // Pack alphabetized per-query entries into chunks of <=700 chars.
     val chunks = entries.foldLeft(Vector(Vector.empty[String])) { (acc, e) =>
       if (acc.last.map(_.length + 1).sum + e.length > 700) acc :+ Vector(e)
       else acc.init :+ (acc.last :+ e)
     }.filter(_.nonEmpty)
     println(summary)
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
+    }
     // Memo-miss transparency (VERDICT r14 'what's wrong #1'): gates that
     // populate a shared-training memo pay the training in run 1 and hit
     // the memo in run 2, so min-of-two drops the training cost from every
     // per-query timing. The accumulated miss seconds per training label
     // are reported as their OWN metric line — the summary/queries_part
     // contract the driver parses is unchanged, and the training cost is
-    // back on the record instead of buried in worst_run_total.
+    // back on the record instead of buried in worst_run_total. It is
+    // printed after the chunk lines, just before the closing summary, so a
+    // 2000-char tail capture holds it next to a complete summary.
     val misses = graft.operators.MemoStats.drain().toSeq.sortBy(_._1)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     println(s"""{"metric":"memo_miss","unit":"sec","misses":$misses}""")
-    chunks.zipWithIndex.foreach { case (c, i) =>
-      println(s"""{"metric":"queries_part","part":${i + 1},"of":${chunks.size},"queries":${c.mkString("{", ",", "}")}}""")
-    }
     println(summary)
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.core._
 
@@ -18,13 +17,8 @@ import graft.core._
 object Demo {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse(".")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
 
     val start = Seq("T", "T", "T", "T", "T")
     val specs = Seq(

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{AuditOps, DedupOps, GraphOps, SimilarityOps, TextOps}
 
@@ -64,12 +64,7 @@ object Pipeline {
     val sfDir = pos.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = pos.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-pipeline").toString)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus(8), 8)
     // wall-clock from here (session up, nothing read) — the number the
     // end-to-end scale curve fits, free of JVM/sbt startup constants
     val t0 = System.nanoTime()

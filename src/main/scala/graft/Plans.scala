@@ -1,14 +1,34 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ExplainMode
 
-/** Regenerates PLANS.md: formatted physical plans of the headline queries,
+/** The plan tool: three verbs over the gate battery's `queryExecution`.
+  *
+  * {{{ sbt "runMain graft.Plans [sfDir] [out]" }}}
+  * Regenerates PLANS.md: formatted physical plans of the headline queries,
   * the artifact backing the "is this the plan you'd want at 1000
   * executors" review (pushdown reaches the scan, small dims broadcast,
   * partial aggregation before every shuffle, simulation shuffle-free).
+  * Rendered at a fixed `local(4, 4)`, so the committed plans do not
+  * depend on the host.
   *
-  *   sbt "runMain graft.Plans /root/testdata/sf0.001 PLANS.md"
+  * {{{ sbt "runMain graft.Plans dump <sfDir> plans/r14 before q1,q2" }}}
+  * Writes `.explain("formatted")` of each named gate (default: every
+  * gate) to `<outDir>/<name>_<suffix>.txt` — the optimization-round
+  * evidence artifact (`plans/r14/<query>_before.txt` / `..._after.txt`).
+  *
+  * {{{ SPARK_GRAFT_CPUS=32 sbt "runMain graft.Plans time <sfDir> 3 q1,q2" }}}
+  * Separates each gate's DRIVER-side cost (analysis + optimization +
+  * physical planning, forced via `queryExecution.executedPlan`) from its
+  * EXECUTION cost (the noop-sink write of the just-planned DataFrame),
+  * each the min over `reps` (default 2) freshly-constructed DataFrames —
+  * the work Bench times, split at the plan boundary.
+  *
+  * `dump` and `time` use the bench session shape (`SPARK_GRAFT_CPUS`,
+  * default 32, one shuffle partition per cpu), so the plan they show is
+  * the one the bench runs, not PLANS.md's local[4] shape.
   */
 object Plans {
   // queries whose plan shape carries the scale argument; dd_clusters is
@@ -270,17 +290,24 @@ object Plans {
     "tx_unigram_encode",
     "tx_unigram_fertility")
 
-  def main(args: Array[String]): Unit = {
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("dump") => dump(args.drop(1))
+    case Some("time") => time(args.drop(1))
+    case _ => render(args)
+  }
+
+  /** The comma-separated gate names, or every gate in name order. */
+  private def gates(arg: Option[String]): Seq[String] =
+    arg.filter(_.nonEmpty).map(_.split(",").map(_.trim).toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted")).trim
+
+  private def render(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4, 4)
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of headline queries (sf0.001, local[4])\n\n")
     sb.append("Regenerate with `sbt \"runMain graft.Plans\"`. Reviewed per the design\n")
@@ -295,10 +322,8 @@ object Plans {
     sb.append("blocking — measured exponent 1.83 at 30×; twins `dd_fuzzy_compound` and\n")
     sb.append("the `dd_fuzzy_scaledblocks` curve config, exponent 0.59).\n")
     headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n```\n").append(plan.trim).append("\n```\n")
+      val plan = formatted(SparkEntry.queries(name)(spark, sfDir))
+      sb.append(s"\n## $name\n\n```\n").append(plan).append("\n```\n")
     }
     // ev_heavy_hitters' distributive top-k runs as the localCheckpoint job,
     // invisible in the final query's explain — print its sub-plan so the
@@ -307,13 +332,49 @@ object Plans {
       import org.apache.spark.sql.functions.col
       val sub = graft.operators.SketchOps.cmsTopKEstimates(
         spark.read.parquet(s"$sfDir/events.parquet"), col("user_id"), 4, 1024, 10)
-      val plan = sub.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       sb.append("\n## ev_heavy_hitters — survivor top-k sub-job (the localCheckpoint job)\n\n```\n")
-        .append(plan.trim).append("\n```\n")
+        .append(formatted(sub)).append("\n```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[plans] wrote ${headline.size} plans to $out")
+    spark.stop()
+  }
+
+  private def dump(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val outDir = args(1)
+    val suffix = args(2)
+    val names = gates(args.lift(3))
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val plan = formatted(SparkEntry.queries(name)(spark, sfDir))
+      Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"), plan + "\n")
+      System.err.println(s"[plandump] $name -> $outDir/${name}_$suffix.txt")
+    }
+    println(s"""{"plandump":${names.size},"out":"${CliJson.str(outDir)}","suffix":"${CliJson.str(suffix)}"}""")
+    spark.stop()
+  }
+
+  private def time(args: Array[String]): Unit = {
+    val sfDir = args(0)
+    val reps = args.lift(1).map(_.toInt).getOrElse(2)
+    val names = gates(args.lift(2))
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
+    Measure.warm(spark, sfDir, Measure.BatteryTables)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val runs = (1 to reps).map { _ =>
+        lazy val df = fn(spark, sfDir)
+        val plan = Measure.seconds(df.queryExecution.executedPlan)
+        (plan, Measure.seconds(Measure.noop(df)))
+      }
+      val plan = runs.map(_._1).min
+      val exec = runs.map(_._2).min
+      println(f"""{"probe":"$name","plan_s":$plan%.3f,"exec_s":$exec%.3f}""")
+    }
     spark.stop()
   }
 }

@@ -206,15 +206,6 @@ object ScaleBench {
           .withColumnRenamed("cid", "label"), 5)
     }))
 
-  private def time2(mk: => DataFrame): Double = {
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      mk.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    math.min(once(), once())
-  }
-
   private def runCorpus10x(spark: SparkSession, sfDir: String): Unit = {
     val tenxDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10x")
     buildCorpus(spark, sfDir, tenxDir)
@@ -238,8 +229,8 @@ object ScaleBench {
     // driver — the recorded tables always come from full runs)
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
     val rows = scaleQueries.filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
-      val base = time2(fn(spark, sfDir))
-      val tenx = time2(fn(spark, tenxDir))
+      val base = Measure.minOf(2)(Measure.noop(fn(spark, sfDir)))
+      val tenx = Measure.minOf(2)(Measure.noop(fn(spark, tenxDir)))
       println(f"| $name | $base%.3f | $tenx%.3f | ${tenx / base}%.1fx |")
       (name, base, tenx)
     }
@@ -583,8 +574,8 @@ object ScaleBench {
       // is ∝ batch (+ the 1-row stats read), INDEPENDENT of how large the
       // indexed corpus has grown — the whole point of the append path vs
       // writeIvfIndex's full-corpus rebuild. The one-time per-scale index
-      // build happens on the first of time2's two runs and is absorbed by
-      // min-of-two (the warm run is pure append).
+      // build happens on the first of the two timed runs and is absorbed
+      // by min-of-two (the warm run is pure append).
       "knn_ivf_append_probe" -> {
         val built = scala.collection.mutable.Map[String, String]()
         (s: SparkSession, d: String, _: Double) => {
@@ -692,7 +683,7 @@ object ScaleBench {
     val onlyC = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
     val rows = curveQueries.filter(q => onlyC.forall(_.contains(q._1))).map { case (name, fn) =>
       val ts = scales.map { case (k, d) =>
-        (k, time2(fn(spark, d, k)), fn(spark, d, k).count()) }
+        (k, Measure.minOf(2)(Measure.noop(fn(spark, d, k))), fn(spark, d, k).count()) }
       // least-squares slope of log t over log k
       val pts = ts.map { case (k, t, _) => (math.log(k), math.log(t)) }
       val n = pts.size
@@ -736,7 +727,7 @@ object ScaleBench {
       val h = hashed.persist(StorageLevel.MEMORY_AND_DISK)
       val b = bands.persist(StorageLevel.MEMORY_AND_DISK)
       val idxRows = h.count() + b.count()
-      val t = time2(DedupOps.minhashPairsAgainst((h, b), batch))
+      val t = Measure.minOf(2)(Measure.noop(DedupOps.minhashPairsAgainst((h, b), batch)))
       val pairs = DedupOps.minhashPairsAgainst((h, b), batch).count()
       println(f"| dd_minhash_incr_probe | ${k}%.0fx | $t%.3f | $pairs | $idxRows |")
       h.unpersist(); b.unpersist()
@@ -784,25 +775,21 @@ object ScaleBench {
       l.join(o, "l_orderkey").groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           sum(col("l_quantity").cast("decimal(18,2)")).cast("double").as("qty"))
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    def minOf(n: Int)(body: => Unit): Double = (1 to n).map(_ => time(body)).min
     // warm page cache
     li.count(); ord.count()
-    val plainSec = minOf(3)(joined(li, ord).collect())
+    val plainSec = Measure.minOf(3)(joined(li, ord).collect())
     val nb = spark.sparkContext.defaultParallelism
-    val writeSec = time {
+    val writeSec = Measure.seconds {
       LayoutOps.writeBucketed(li, "sb_lineitem", Seq("l_orderkey"), nb)
       LayoutOps.writeBucketed(ord, "sb_orders", Seq("l_orderkey"), nb)
     }
     val bl = spark.table("sb_lineitem"); val bo = spark.table("sb_orders")
-    val bucketedSec = minOf(3)(joined(bl, bo).collect())
+    val bucketedSec = Measure.minOf(3)(joined(bl, bo).collect())
     val planHasExchange = joined(bl, bo).queryExecution.executedPlan.toString
       .split("SortMergeJoin").last.contains("Exchange")
     spark.sql("DROP TABLE IF EXISTS sb_lineitem")
     spark.sql("DROP TABLE IF EXISTS sb_orders")
-    println(f"""{"metric":"bucketed_join","plain_sec":$plainSec%.3f,"bucketed_sec":$bucketedSec%.3f,"write_once_sec":$writeSec%.3f,"buckets":$nb,"join_subtree_has_exchange":$planHasExchange,"sf":"$sfDir"}""")
+    println(f"""{"metric":"bucketed_join","plain_sec":$plainSec%.3f,"bucketed_sec":$bucketedSec%.3f,"write_once_sec":$writeSec%.3f,"buckets":$nb,"join_subtree_has_exchange":$planHasExchange,"sf":"${CliJson.str(sfDir)}"}""")
   }
 
   /** ANN maintenance payoff: the SAME nprobe top-k probe served from an
@@ -841,39 +828,26 @@ object ScaleBench {
       SimilarityOps.ivfTopKFromIndex(l, qs, c, nprobe = 3, k = 8)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     }
-    def time2s(body: => Unit): Double = {
-      def once = { val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9 }
-      math.min(once, once)
-    }
     val filesBefore = countFiles(new java.io.File(dir))
     val servedBefore = probe()
-    val tBefore = time2s { probe(); () }
+    val tBefore = Measure.minOf(2)(probe())
     val folded = SimilarityOps.compactIvfIndex(spark, dir)
     val filesAfter = countFiles(new java.io.File(dir))
     val servedAfter = probe()
-    val tAfter = time2s { probe(); () }
+    val tAfter = Measure.minOf(2)(probe())
     require(servedAfter == servedBefore,
       "compaction changed the served top-k — maintenance must be invisible")
     println(f"""{"metric":"ivf_compact","versions":$nVersions,"folded":$folded,""" +
       f""""probe_sec_appends":$tBefore%.3f,"probe_sec_compacted":$tAfter%.3f,""" +
       f""""files_before":$filesBefore,"files_after":$filesAfter,""" +
-      f""""serving_equal":true,"sf":"$sfDir"}""")
+      f""""serving_equal":true,"sf":"${CliJson.str(sfDir)}"}""")
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus(32)
     val mode = args.headOption.getOrElse("corpus10x")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-scale-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, cpus)
     mode match {
       case "corpus10x" => runCorpus10x(spark, sfDir)
       case "curve" => runCurve(spark, sfDir)

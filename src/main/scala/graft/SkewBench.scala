@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.SkewJoin
 
@@ -27,16 +26,9 @@ import graft.operators.SkewJoin
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus(32)
+    val spark = Session.local(cpus, cpus)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
 
     val events = spark.read.parquet(s"$sfDir/events.parquet")
     // skewed fact side, inflated 32x so the hot partition is heavy enough
@@ -55,29 +47,16 @@ object SkewBench {
       .agg(count(lit(1)).as("user_events"))
     left.count(); right.count() // warm page cache + JIT
 
-    def time2(label: String)(mk: => org.apache.spark.sql.DataFrame): (String, Double) = {
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        mk.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      label -> math.min(once(), once())
-    }
-
-    val naiveAqe = time2("naive_aqe_skewjoin") {
-      left.join(right, col("k") === col("rk"))
-    }
+    val naiveAqe = "naive_aqe_skewjoin" ->
+      Measure.minOf(2)(Measure.noop(left.join(right, col("k") === col("rk"))))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val naiveNoAqe = time2("naive_no_aqe") {
-      left.join(right, col("k") === col("rk"))
-    }
-    val saltedNoAqe = time2("salted_no_aqe") {
-      SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), 32)
-    }
+    val naiveNoAqe = "naive_no_aqe" ->
+      Measure.minOf(2)(Measure.noop(left.join(right, col("k") === col("rk"))))
+    val saltedNoAqe = "salted_no_aqe" ->
+      Measure.minOf(2)(Measure.noop(SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), 32)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    val saltedAqe = time2("salted_aqe") {
-      SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), 32)
-    }
+    val saltedAqe = "salted_aqe" ->
+      Measure.minOf(2)(Measure.noop(SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), 32)))
 
     // diagnose->act: the salt count comes from skewReport's suggestion
     // instead of a hand-picked constant — suggested_salt levels the hot
@@ -89,9 +68,8 @@ object SkewBench {
       cpus.toLong).toInt
     println(s"""{"metric":"skew_report","suggested_salt":${rep.getAs[Long]("suggested_salt")},"applied_salt":$suggested,"skew_factor":${rep.getAs[Double]("skew_factor")}}""")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val saltedSuggested = time2("salted_suggested_no_aqe") {
-      SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), suggested)
-    }
+    val saltedSuggested = "salted_suggested_no_aqe" -> Measure.minOf(2)(
+      Measure.noop(SkewJoin.saltedInnerJoin(left, right, col("k"), col("rk"), suggested)))
     spark.conf.set("spark.sql.adaptive.enabled", "true")
 
     val all = Seq(naiveAqe, naiveNoAqe, saltedNoAqe, saltedAqe, saltedSuggested)

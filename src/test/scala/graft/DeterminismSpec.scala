@@ -10,6 +10,7 @@ package graft
   * `SparkEntry.queries` gate re-runs at 4 vs 32 shuffle partitions and
   * every output must match row-for-row, bit-for-bit (Double.toString is
   * shortest-unique per bit pattern, so string equality is bit equality).
+  * Both runs come from the one battery pass in [[GateBattery]].
   *
   * Two tests: the curated high-risk slice (fast, runs the families where
   * merge order bites hardest — kept as the quick dev signal) and the
@@ -82,26 +83,20 @@ class DeterminismSpec extends SparkTestBase {
     "mm_audio_stats")       // PCM decode + exact sample sums
 
   private def sweep(gates: Seq[String]): Unit = {
-    val orig = spark.conf.get("spark.sql.shuffle.partitions")
-    def runAt(name: String, parts: String): Seq[String] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      SparkEntry.queries(name)(spark, sfDir)
-        .collect().map(_.toString).sorted.toSeq
+    val missing = gates.filterNot(SparkEntry.queries.contains)
+    assert(missing.isEmpty, s"unknown gates in the sweep: $missing")
+    val runs = GateBattery.runs(spark, sfDir)
+    val diffs = gates.flatMap { g =>
+      // a gate that threw at either partitioning fails the sweep with its error
+      val at4 = runs(g).at4.toTry.get
+      val at32 = runs(g).at32.toTry.get
+      if (at4 == at32) None
+      else Some(s"$g: ${at4.length} vs ${at32.length} rows, first diff " +
+        at4.zip(at32).find(p => p._1 != p._2).map(p => s"${p._1} != ${p._2}")
+          .getOrElse("row-count mismatch"))
     }
-    try {
-      val missing = gates.filterNot(SparkEntry.queries.contains)
-      assert(missing.isEmpty, s"unknown gates in the sweep: $missing")
-      val diffs = gates.flatMap { g =>
-        val at4 = runAt(g, "4")
-        val at32 = runAt(g, "32")
-        if (at4 == at32) None
-        else Some(s"$g: ${at4.length} vs ${at32.length} rows, first diff " +
-          at4.zip(at32).find(p => p._1 != p._2).map(p => s"${p._1} != ${p._2}")
-            .getOrElse("row-count mismatch"))
-      }
-      assert(diffs.isEmpty,
-        s"outputs changed with shuffle partitioning:\n${diffs.mkString("\n")}")
-    } finally spark.conf.set("spark.sql.shuffle.partitions", orig)
+    assert(diffs.isEmpty,
+      s"outputs changed with shuffle partitioning:\n${diffs.mkString("\n")}")
   }
 
   test("gate outputs are identical at shuffle.partitions 4 vs 32 (merge-order independence)") {

@@ -134,4 +134,16 @@ class FunctionsSpec extends SparkTestBase {
     assert(math.abs(s.variance - vals.map(v => (v - mean) * (v - mean)).sum / 6) < 1e-12)
     assert(s.min_v == 0.0 && s.max_v == 1.0)
   }
+
+  test("Session.local on a running session returns it with the shared confs") {
+    // a harness that calls a main in-process (the benchmark's pipeline
+    // workload) gets its own session back, resized to the main's partitions
+    try {
+      val s = Session.local(4, 8)
+      assert(s eq spark)
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "8")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+  }
 }

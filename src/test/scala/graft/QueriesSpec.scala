@@ -22,9 +22,8 @@ class QueriesSpec extends SparkTestBase {
   }
 
   test("all queries execute at sf0.001 and return a schema") {
-    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { fn(spark, sfDir).collect(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+    val failures = GateBattery.runs(spark, sfDir).toSeq.sortBy(_._1).flatMap { case (name, r) =>
+      r.at4.left.toOption.map(e => s"$name: ${e.getMessage}")
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

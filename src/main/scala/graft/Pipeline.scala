@@ -7,14 +7,7 @@ import graft.operators.{AuditOps, DedupOps, GraphOps, SimilarityOps, TextOps}
 /** End-to-end training-corpus build — the library's operators chained the
   * way a production pipeline runs them, in one command:
   *
-  *   sbt "runMain graft.Pipeline <sfDir> <outDir> [--bucketed] [--tokenizer=DIR]"
-  *
-  * With `--bucketed` the document-side dedup runs over a
-  * doc_id-bucketed corpus table ([[graft.operators.LayoutOps.writeBucketed]]):
-  * stages reduce to keep-id sets, the survivors materialize through ONE
-  * bucket-aligned semi join, and the release [[DedupOps.snapshotDiff]]
-  * (v1 → v2, both bucketed) plans zero exchanges — the corpus text never
-  * shuffles after the one ingest write.
+  *   sbt "runMain graft.Pipeline <sfDir> <outDir> [--tokenizer=DIR]"
   *
   * documents.parquet
   *   → admission gate ([[AuditOps.dataQualityReport]] — structural
@@ -38,20 +31,14 @@ import graft.operators.{AuditOps, DedupOps, GraphOps, SimilarityOps, TextOps}
   *
   * Prints one JSON line per stage with surviving counts. Every stage is
   * the SAME operator the correctness gate pins against DuckDB — this main
-  * only composes them. Stages are localCheckpoint'ed between steps (the
-  * iterative-lineage discipline); a cluster deployment would write
-  * intermediate tables instead.
+  * only composes them. Each counted stage is pinned once with
+  * localCheckpoint (the iterative-lineage discipline); beyond those, a
+  * frame is pinned only when it is read more than once — the full-corpus
+  * MinHash pairs, the embedding near-pairs and a freshly trained BPE
+  * model. A cluster deployment would write intermediate tables instead.
   */
 object Pipeline {
   def main(args: Array[String]): Unit = {
-    // `--bucketed` switches the document-side dedup to the bucketed-corpus
-    // variant: the doc_id shuffle is paid ONCE at ingest write time and
-    // every later doc_id-keyed join (stage keep-set semi joins, the final
-    // survivor join, the release snapshotDiff) reads co-partitioned
-    // buckets with no corpus-side exchange (BucketedJoinSpec pins the
-    // plans). At 100 TB this is the difference between re-shuffling the
-    // wide text column per stage and never shuffling it at all.
-    val bucketed = args.contains("--bucketed")
     // `--tokenizer=DIR`: train-once/serve-many for the token budget —
     // first build trains a BPE tokenizer on the cleaned corpus and
     // persists it (TextOps.writeTokenizer); every later build LOADS the
@@ -98,128 +85,49 @@ object Pipeline {
       sys.exit(1)
     }
 
-    // Stages 1-4 (decontaminate → exact dedup → near dedup → quality).
-    // Plain path: stage-by-stage localCheckpoints. Bucketed path: every
-    // stage reduces to a KEEP-ID set (ids/digests are all that shuffles;
-    // the wide text column never leaves its bucket), then ONE semi join
-    // against the bucketed corpus materializes the survivors and the
-    // release snapshotDiff runs bucket-to-bucket with zero exchanges.
-    val good: DataFrame = if (bucketed) {
-      import graft.operators.LayoutOps
-      // drop catalog entry AND warehouse location: a fresh session's
-      // catalog does not know a previous run's managed table, so DROP
-      // alone leaves the directory behind and saveAsTable refuses it
-      def dropCorpusTable(name: String): Unit = {
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        val p = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      dropCorpusTable("graft_corpus_v1")
-      dropCorpusTable("graft_corpus_v2")
-      LayoutOps.writeBucketed(raw, "graft_corpus_v1", Seq("doc_id"), 16)
-      val corpus = spark.table("graft_corpus_v1")
-      println(s"""{"stage":"bucketed_v1","docs":${corpus.count()}}""")
-      val bench = corpus.filter(col("doc_id") % 50 === 0)
-      // broadcast digest anti join: no corpus shuffle
-      val clean0 = DedupOps.antiJoinDedup(corpus, bench).localCheckpoint()
-      println(s"""{"stage":"decontaminated","docs":${clean0.count()}}""")
-      // MinHash pass runs ONCE per build (ADVICE r8: quarantine and
-      // near-dup each paid a full shingle→minhash→band pass — the most
-      // expensive scan in the pipeline, twice). Pairs are pairwise
-      // (per-doc signatures, band equijoin), so the near-dup stage's
-      // pairs over the exact-deduped corpus are EXACTLY these pairs with
-      // both endpoints surviving — a semi join, not a recompute.
-      val pairsAll = DedupOps.minhashPairs(corpus).localCheckpoint()
-      // dup-graph shape QA: clique-like clusters are healthy, chain-like
-      // ones over-merge (one pass over the checkpointed pair set)
-      val gqB = GraphOps.triangleStats(pairsAll).collect()(0)
-      println(s"""{"stage":"graph_qa","edges":${gqB.getLong(0)},""" +
-        s""""triangles":${gqB.getLong(1)},"wedges":${gqB.getLong(2)},""" +
-        s""""clustering":${if (gqB.isNullAt(3)) "null" else gqB.getDouble(3)}}""")
-      // contamination blast radius, ids only (the plain path's stage 1b)
-      val qIds = GraphOps.quarantineSet(pairsAll,
-          bench.select("doc_id"), maxHops = 2)
-        .filter(col("hops") > 0).select("doc_id").localCheckpoint()
-      val clean = clean0.join(qIds, Seq("doc_id"), "left_anti").localCheckpoint()
-      println(s"""{"stage":"quarantined","docs":${clean.count()}}""")
-      // keep-id sets: digests/ids only ever shuffle, text stays put
-      val exactIds = clean.groupBy(md5(col("text")).as("d"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id").localCheckpoint()
-      // checkpoint the corpus-side frames too: each diagnostic count
-      // would otherwise re-execute the whole un-checkpointed join chain —
-      // the plain path's stage() discipline, applied here
-      val exact = corpus.join(exactIds, Seq("doc_id"), "left_semi").localCheckpoint()
-      println(s"""{"stage":"exact_dedup","docs":${exact.count()}}""")
-      val exactPairs = pairsAll
-        .join(exactIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
-        .join(exactIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
-      val nearIds = DedupOps.keepCanonical(exact.select("doc_id"),
-          DedupOps.nearDupClusters(exactPairs))
-        .localCheckpoint()
-      val near = corpus.join(nearIds, Seq("doc_id"), "left_semi").localCheckpoint()
-      println(s"""{"stage":"near_dedup","docs":${near.count()}}""")
-      val goodIds = TextOps.quality(near)
-        .filter(col("quality_score") >= 0.3).select("doc_id").localCheckpoint()
-      val survivors = corpus.join(goodIds, Seq("doc_id"), "left_semi")
-      LayoutOps.writeBucketed(survivors, "graft_corpus_v2", Seq("doc_id"), 16)
-      val v2 = spark.table("graft_corpus_v2")
-      // release audit: what did this build drop vs the ingest snapshot?
-      // both snapshots bucketed by doc_id → snapshotDiff plans NO exchange
-      val diff = DedupOps.snapshotDiff(spark.table("graft_corpus_v1"), v2)
-        .groupBy("status").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      println(s"""{"stage":"snapshot_diff","unchanged":${
-        diff.getOrElse("unchanged", 0L)},"removed":${diff.getOrElse("removed", 0L)}}""")
-      println(s"""{"stage":"quality_filtered","docs":${v2.count()}}""")
-      v2
-    } else {
-      // 1. cross-corpus decontamination (benchmark = every 50th doc, the
-      //    gate convention; swap in the real eval set in production)
-      val bench = raw.filter(col("doc_id") % 50 === 0)
-      val clean0 = stage("decontaminated", DedupOps.antiJoinDedup(raw, bench))
+    // 1. cross-corpus decontamination (benchmark = every 50th doc, the
+    //    gate convention; swap in the real eval set in production)
+    val bench = raw.filter(col("doc_id") % 50 === 0)
+    val clean0 = stage("decontaminated", DedupOps.antiJoinDedup(raw, bench))
 
-      // MinHash pass runs ONCE per build (ADVICE r8) — quarantine uses
-      // the full-corpus pairs, near-dup derives ITS pairs by semi-joining
-      // both endpoints against the exact-dedup survivors (pairs are
-      // pairwise, so the restriction is exact, not an approximation)
-      val pairsAll = DedupOps.minhashPairs(raw).localCheckpoint()
-      // dup-graph shape QA (see the bucketed path's note)
-      val gqP = GraphOps.triangleStats(pairsAll).collect()(0)
-      println(s"""{"stage":"graph_qa","edges":${gqP.getLong(0)},""" +
-        s""""triangles":${gqP.getLong(1)},"wedges":${gqP.getLong(2)},""" +
-        s""""clustering":${if (gqP.isNullAt(3)) "null" else gqP.getDouble(3)}}""")
+    // MinHash pass runs ONCE per build (ADVICE r8) — quarantine uses the
+    // full-corpus pairs, near-dup derives ITS pairs by semi-joining both
+    // endpoints against the exact-dedup survivors (pairs are pairwise, so
+    // the restriction is exact, not an approximation). Pinned: read three
+    // times (graph QA, quarantine, near-dup).
+    val pairsAll = DedupOps.minhashPairs(raw).localCheckpoint()
+    // dup-graph shape QA: clique-like clusters are healthy, chain-like
+    // ones over-merge (one pass over the pinned pair set)
+    val gq = GraphOps.triangleStats(pairsAll).collect()(0)
+    println(s"""{"stage":"graph_qa","edges":${gq.getLong(0)},""" +
+      s""""triangles":${gq.getLong(1)},"wedges":${gq.getLong(2)},""" +
+      s""""clustering":${if (gq.isNullAt(3)) "null" else gq.getDouble(3)}}""")
 
-      // 1b. contamination blast radius: the benchmark's transitive
-      //     near-dups (paraphrase chains) leave with it — the exact anti
-      //     join above only catches verbatim copies
-      val qIds = GraphOps.quarantineSet(pairsAll,
-          bench.select("doc_id"), maxHops = 2)
-        .filter(col("hops") > 0).select("doc_id").localCheckpoint()
-      val clean = stage("quarantined",
-        clean0.join(qIds, Seq("doc_id"), "left_anti"))
+    // 1b. contamination blast radius: the benchmark's transitive near-dups
+    //     (paraphrase chains) leave with it — the exact anti join above
+    //     only catches verbatim copies
+    val qIds = GraphOps.quarantineSet(pairsAll, bench.select("doc_id"), maxHops = 2)
+      .filter(col("hops") > 0).select("doc_id")
+    val clean = stage("quarantined", clean0.join(qIds, Seq("doc_id"), "left_anti"))
 
-      // 2. exact dedup: keep the smallest doc_id per content digest
-      val keepIds = clean.groupBy(md5(col("text")).as("d"))
-        .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
-      val exact = stage("exact_dedup",
-        clean.join(keepIds, Seq("doc_id"), "left_semi"))
+    // 2. exact dedup: keep the smallest doc_id per content digest
+    val keepIds = clean.groupBy(md5(col("text")).as("d"))
+      .agg(min(col("doc_id")).as("doc_id")).select("doc_id")
+    val exact = stage("exact_dedup", clean.join(keepIds, Seq("doc_id"), "left_semi"))
 
-      // 3. near-dup dedup: pairs → components → canonical survivors
-      val survIds = exact.select("doc_id").localCheckpoint()
-      val exactPairs = pairsAll
-        .join(survIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
-        .join(survIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
-      val nearDeduped = stage("near_dedup", DedupOps.keepCanonical(exact,
-        DedupOps.nearDupClusters(exactPairs)))
+    // 3. near-dup dedup: pairs → components → canonical survivors
+    val survIds = exact.select("doc_id")
+    val exactPairs = pairsAll
+      .join(survIds.withColumnRenamed("doc_id", "doc_a"), Seq("doc_a"), "left_semi")
+      .join(survIds.withColumnRenamed("doc_id", "doc_b"), Seq("doc_b"), "left_semi")
+    val nearDeduped = stage("near_dedup", DedupOps.keepCanonical(exact,
+      DedupOps.nearDupClusters(exactPairs)))
 
-      // 4. quality floor
-      val goodIds = TextOps.quality(nearDeduped)
-        .filter(col("quality_score") >= 0.3).select("doc_id")
-      stage("quality_filtered",
-        nearDeduped.join(goodIds, Seq("doc_id"), "left_semi"))
-    }
+    // 4. quality floor
+    val goodIds = TextOps.quality(nearDeduped)
+      .filter(col("quality_score") >= 0.3).select("doc_id")
+    val good = stage("quality_filtered",
+      nearDeduped.join(goodIds, Seq("doc_id"), "left_semi"))
 
     // 5. temperature mixture (α = 0.5; rarest language keeps everything)
     val mixed = stage("mixture_applied",
@@ -290,7 +198,8 @@ object Pipeline {
       SimilarityOps.semanticDecontaminate(
         embAll.filter(col("vec_id") % 50 =!= 0),
         embAll.filter(col("vec_id") % 50 === 0),
-        0.40, bits = 4, tables = 48, seed = 4241L))
+        0.40, SimilarityOps.RELEASE_DECON_BITS, SimilarityOps.RELEASE_DECON_TABLES,
+        SimilarityOps.RELEASE_DECON_SEED))
     val cents = emb.filter(col("vec_id") < 16)
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
     val pairs = SimilarityOps.semanticDedup(emb, broadcast(cents), 0.40)

@@ -206,6 +206,20 @@ object ScaleBench {
           .withColumnRenamed("cid", "label"), 5)
     }))
 
+  // dev knob: SPARK_GRAFT_SCALE_ONLY=q1,q2 re-measures a subset (the
+  // recorded tables always come from full runs)
+  private def selected(name: String): Boolean =
+    sys.env.get("SPARK_GRAFT_SCALE_ONLY").forall(_.split(",").contains(name))
+
+  /** Least-squares slope of log t over log k for `(k, t)` points. */
+  private def fitSlope(pts: Seq[(Double, Double)]): Double = {
+    val lp = pts.map { case (k, t) => (math.log(k), math.log(t)) }
+    val n = lp.size
+    val (mx, my) = (lp.map(_._1).sum / n, lp.map(_._2).sum / n)
+    lp.map(p => (p._1 - mx) * (p._2 - my)).sum /
+      lp.map(p => (p._1 - mx) * (p._1 - mx)).sum
+  }
+
   private def runCorpus10x(spark: SparkSession, sfDir: String): Unit = {
     val tenxDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/tmp/graft_scale10x")
     buildCorpus(spark, sfDir, tenxDir)
@@ -225,10 +239,7 @@ object ScaleBench {
       s"exact=${exactPairs.size} lsh=${lshPairs.size} equal=${exactPairs == lshPairs}")
     println(f"| query | sf0.1 s | 10x s | growth |")
     println(f"|---|---|---|---|")
-    // dev knob: comma-separated subset to re-measure (never set by the
-    // driver — the recorded tables always come from full runs)
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-    val rows = scaleQueries.filter(q => only.forall(_.contains(q._1))).map { case (name, fn) =>
+    val rows = scaleQueries.filter(q => selected(q._1)).map { case (name, fn) =>
       val base = Measure.minOf(2)(Measure.noop(fn(spark, sfDir)))
       val tenx = Measure.minOf(2)(Measure.noop(fn(spark, tenxDir)))
       println(f"| $name | $base%.3f | $tenx%.3f | ${tenx / base}%.1fx |")
@@ -678,18 +689,10 @@ object ScaleBench {
     val scales = Seq(1.0 -> sfDir, 10.0 -> tenxDir, 30.0 -> thirtyDir)
     println("| query | 1x s | 10x s | 30x s | fitted exponent | rows@1x/10x/30x |")
     println("|---|---|---|---|---|---|")
-    // dev knob mirroring runCorpus10x's: comma-separated subset (never set
-    // by the driver — recorded tables come from full runs)
-    val onlyC = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-    val rows = curveQueries.filter(q => onlyC.forall(_.contains(q._1))).map { case (name, fn) =>
+    val rows = curveQueries.filter(q => selected(q._1)).map { case (name, fn) =>
       val ts = scales.map { case (k, d) =>
         (k, Measure.minOf(2)(Measure.noop(fn(spark, d, k))), fn(spark, d, k).count()) }
-      // least-squares slope of log t over log k
-      val pts = ts.map { case (k, t, _) => (math.log(k), math.log(t)) }
-      val n = pts.size
-      val (mx, my) = (pts.map(_._1).sum / n, pts.map(_._2).sum / n)
-      val slope = pts.map(p => (p._1 - mx) * (p._2 - my)).sum /
-        pts.map(p => (p._1 - mx) * (p._1 - mx)).sum
+      val slope = fitSlope(ts.map { case (k, t, _) => (k, t) })
       println(f"| $name | ${ts(0)._2}%.3f | ${ts(1)._2}%.3f | ${ts(2)._2}%.3f | $slope%.2f " +
         f"| ${ts(0)._3}/${ts(1)._3}/${ts(2)._3} |")
       (name, ts, slope)
@@ -699,14 +702,6 @@ object ScaleBench {
         f""""exponent":$slope%.2f,"rows":[${ts(0)._3},${ts(1)._3},${ts(2)._3}]}"""
     }.mkString("{", ",", "}")
     println(s"""{"metric":"scalecurve","queries":$json}""")
-
-    def fitSlope(pts: Seq[(Double, Double)]): Double = {
-      val lp = pts.map { case (k, t) => (math.log(k), math.log(t)) }
-      val n = lp.size
-      val (mx, my) = (lp.map(_._1).sum / n, lp.map(_._2).sum / n)
-      lp.map(p => (p._1 - mx) * (p._2 - my)).sum /
-        lp.map(p => (p._1 - mx) * (p._1 - mx)).sum
-    }
 
     // Incremental-dedup PROBE cost vs corpus scale: the corpus MinHash
     // index is built ONCE per scale and persisted (the production shape —

@@ -896,6 +896,16 @@ object SimilarityOps {
       .distinct()
   }
 
+  /** The release build's [[semanticDecontaminate]] blocking: 4-bit
+    * signatures in 48 tables from hyperplane seed 4241. [[graft.Pipeline]]
+    * and the streaming ingest ([[graft.streaming.StreamOps]]) both use
+    * these, so a streamed batch drops exactly the vectors the batch build
+    * drops.
+    */
+  val RELEASE_DECON_BITS = 4
+  val RELEASE_DECON_TABLES = 48
+  val RELEASE_DECON_SEED = 4241L
+
   /** SEMANTIC DECONTAMINATION — drop every corpus vector whose embedding
     * is ≥ `threshold` cosine to ANY benchmark vector: the eval-leakage
     * guard a training pipeline runs before the corpus ships (n-gram

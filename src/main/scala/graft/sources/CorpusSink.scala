@@ -42,7 +42,7 @@ object CorpusSink {
     * consumer runs to certify a delivery matches the publisher's manifest.
     */
   def manifest(spark: SparkSession, dir: String, idCol: Column): DataFrame =
-    spark.read.parquet(dir)
+    spark.read.parquet(literalPath(dir))
       // partition-directory type inference reads `shard` back as int —
       // pin long so the manifest schema matches shardCol's type
       .groupBy(col("shard").cast("long").as("shard"))
@@ -52,4 +52,12 @@ object CorpusSink {
         // of the digest AND bumps n_rows — the pair of columns together
         // catches both corruption classes)
         bit_xor(xxhash64(idCol.cast("string"))).as("id_digest"))
+
+  /** `path` with Hadoop's glob metacharacters escaped, so a read opens
+    * exactly that path: `spark.read` globs its paths, so a root such as
+    * `we"ird\dir` or `runs[1]` would otherwise name a pattern (a missing
+    * path, or a sibling's files).
+    */
+  private[sources] def literalPath(path: String): String =
+    path.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
 }

@@ -139,7 +139,7 @@ object SnapshotStore {
     // manifest certifies the written bytes (read back, the CorpusSink
     // discipline): count + order-independent XOR digest of the id hash
     // (native bit_xor aggregate — exact, distributive, 8 bytes of state)
-    val back = df.sparkSession.read.parquet(dataDir(root, v))
+    val back = readVersion(df.sparkSession, root, v)
     val m = back.agg(count(lit(1)).as("n_rows"),
         coalesce(bit_xor(xxhash64(idCol)), lit(0L)).as("digest"))
       .collect()(0)
@@ -174,7 +174,7 @@ object SnapshotStore {
 
   /** Time travel: read a pinned version (must not be vacuumed). */
   def readVersion(spark: SparkSession, root: String, v: Long): DataFrame =
-    spark.read.parquet(dataDir(root, v))
+    spark.read.parquet(CorpusSink.literalPath(dataDir(root, v)))
 
   /** Roll back: atomically point `_latest` at an EXISTING older version
     * (no data movement — the whole point of immutable version dirs).
@@ -200,7 +200,7 @@ object SnapshotStore {
       return spark.range(0).select(col("id").as("version"),
         col("id").as("n_rows"), col("id").as("digest"))
     spark.read.json(d.listFiles().filter(_.getName.endsWith(".json"))
-        .map(_.getPath).toSeq: _*)
+        .map(f => CorpusSink.literalPath(f.getPath)).toSeq: _*)
       .select(col("version").cast("long"), col("n_rows").cast("long"),
         col("digest").cast("long"))
       .orderBy("version")

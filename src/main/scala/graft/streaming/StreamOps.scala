@@ -1131,13 +1131,15 @@ object StreamOps {
             graft.operators.DedupOps.nearDupClusters(
               graft.operators.DedupOps.minhashPairs(freshIn)))
           // 6. semantic decontamination (Pipeline's embedding-side guard):
-          //    fixed hyperplanes (same bits/tables/seed as graft.Pipeline),
-          //    per-batch LSH-bucketed anti join against the broadcast bench
+          //    the release's fixed hyperplanes, per-batch LSH-bucketed
+          //    anti join against the broadcast bench
           val decon = benchEmbeddings match {
             case Some(bench) =>
-              graft.operators.SimilarityOps.semanticDecontaminate(
-                  fresh.withColumnRenamed("doc_id", "vec_id"), bench,
-                  semThreshold, bits = 4, tables = 48, seed = 4241L)
+              import graft.operators.SimilarityOps
+              SimilarityOps.semanticDecontaminate(
+                  fresh.withColumnRenamed("doc_id", "vec_id"), bench, semThreshold,
+                  SimilarityOps.RELEASE_DECON_BITS, SimilarityOps.RELEASE_DECON_TABLES,
+                  SimilarityOps.RELEASE_DECON_SEED)
                 .withColumnRenamed("vec_id", "doc_id")
             case None => fresh
           }

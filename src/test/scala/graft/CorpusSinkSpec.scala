@@ -179,6 +179,30 @@ class CorpusSinkSpec extends SparkTestBase {
     assert(d.getOrElse("removed", 0) == ids.count(i => i % 13 == 0 && i % 10 != 0), d.toString)
   }
 
+  test("SnapshotStore and CorpusSink read back roots with glob metacharacters literally") {
+    import graft.sources.SnapshotStore
+    val docs = graft.operators.Tables.t(spark, sfDir, "documents")
+      .select("doc_id", "lang").limit(50)
+    val base = java.nio.file.Files.createTempDirectory("graft-glob").toString
+    // each root next to the sibling its name matches as a glob pattern
+    // (`\s` unescapes to `s`, `[x]` matches `x`): a globbing read-back
+    // would certify and return the decoy's 10 rows
+    Seq("back\\slash" -> "backslash", "brack[x]et" -> "brackxet").foreach {
+      case (name, decoy) =>
+        SnapshotStore.publish(docs.limit(10), s"$base/$decoy/snap", col("doc_id"))
+        CorpusSink.writeSharded(docs.limit(10), s"$base/$decoy/sharded", col("doc_id"), 4)
+        val root = s"$base/$name"
+        assert(SnapshotStore.publish(docs, s"$root/snap", col("doc_id")) == 1L)
+        assert(SnapshotStore.read(spark, s"$root/snap").count() == 50)
+        assert(SnapshotStore.versions(spark, s"$root/snap").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toSeq == Seq(1L -> 50L))
+        val m = CorpusSink.writeSharded(docs, s"$root/sharded", col("doc_id"), 4)
+        assert(m.collect().map(_.getLong(1)).sum == 50)
+        assert(CorpusSink.manifest(spark, s"$root/sharded", col("doc_id"))
+          .collect().map(_.getLong(1)).sum == 50)
+    }
+  }
+
   test("readJsonl: round-trip, corrupt-line and missing-required quarantine") {
     import graft.sources.CorpusSource
     import org.apache.spark.sql.types._

@@ -85,9 +85,9 @@ class BucketedJoinSpec extends SparkTestBase {
   }
 
   test("pipeline bucketed dedup: survivor semi join streams the corpus with only the id-side exchange") {
-    // graft.Pipeline --bucketed reduces every dedup stage to a keep-id
-    // set and semi-joins it against the bucketed corpus: the wide text
-    // rows must read co-partitioned buckets directly — the ONLY exchange
+    // LayoutOps semi-join contract: a keep-id set semi-joined against a
+    // doc_id-bucketed corpus (LayoutOps.writeBucketed) reads the wide
+    // text rows from co-partitioned buckets directly — the ONLY exchange
     // in the join is the tiny id side aligning to the bucket layout.
     val docs = Tables.t(spark, sfDir, "documents")
     LayoutOps.writeBucketed(docs, "b_corpus", Seq("doc_id"), 4)

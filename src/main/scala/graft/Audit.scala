@@ -62,9 +62,12 @@ object Audit {
         NotNull("lineitem", "l_shipdate"),
         UniqueKey("orders", Seq("o_orderkey")),
         UniqueKey("part", Seq("p_partkey")),
-        // the generator reuses (orderkey, linenumber) — the real unique key
-        // of this corpus includes the part and supplier (the gate's
-        // aud_dq_report keeps the 2-column form as its failing-check demo)
+        // the generator reuses (orderkey, linenumber), so the key adds the
+        // part and supplier (the gate's aud_dq_report keeps the 2-column
+        // form as its failing-check demo). Even the 4-column key is not
+        // guaranteed unique: sf0.001 lineitem holds one duplicate,
+        // (1294, 4, 123, 0) with l_quantity 43 and 19, which this check
+        // reports and fails on; sf0.01 and sf0.1 hold none.
         UniqueKey("lineitem", Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")),
         FkIntegrity("orders", "o_custkey", "customer", "c_custkey"),
         FkIntegrity("lineitem", "l_partkey", "part", "p_partkey"),

@@ -408,28 +408,8 @@ object AuditOps {
     * totals ride a 1-row broadcast crossJoin (the q6 pattern).
     */
   def calibrationReport(df: DataFrame, scoreCol: Column, labelCol: Column,
-      bins: Int = 10): DataFrame = {
-    require(bins >= 2, s"calibrationReport needs bins >= 2, got $bins")
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val g = df.filter(scoreCol.isNotNull)
-      .select(
-        greatest(least(floor(scoreCol * bins).cast("long"), lit(bins - 1L)),
-          lit(0L)).as("bin"),
-        when(labelCol, 1L).otherwise(0L).as("y"))
-      .groupBy("bin")
-      .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"))
-    val tot = g.agg(
-      sum(col("n")).cast(dec).as("nn"),
-      sum(abs(lit(2L * bins).cast(dec) * col("n_pos") -
-        col("n").cast(dec) * (lit(2) * col("bin") + 1))).as("ece_num"))
-    g.crossJoin(broadcast(tot))
-      .select(col("bin"),
-        ((lit(2) * col("bin") + 1).cast("double") / lit(2.0 * bins)).as("conf_mid"),
-        col("n"), col("n_pos"),
-        (col("n_pos").cast("double") / col("n").cast("double")).as("acc"),
-        (col("ece_num").cast("double") /
-          (lit(2L * bins).cast(dec) * col("nn")).cast("double")).as("ece"))
-  }
+      bins: Int = 10): DataFrame =
+    calibrationReportBy(oneGroup(df), scoreCol, labelCol, OneGroup, bins).drop("grp")
 
   /** Per-group [[calibrationReport]] — the data-card form (one reliability
     * diagram + ECE per source/domain/shard), completing the per-group
@@ -522,38 +502,8 @@ object AuditOps {
     * crossJoins over the category table — nothing data-sized past the
     * first aggregations.
     */
-  def categoricalDrift(oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame = {
-    OpContract.requireCols(oldDf, "AuditOps.categoricalDrift old", catCol)
-    OpContract.requireCols(newDf, "AuditOps.categoricalDrift new", catCol)
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val o = oldDf.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).as("cat")).agg(count(lit(1)).as("o_cnt"))
-    val n = newDf.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).as("cat")).agg(count(lit(1)).as("n_cnt"))
-    val j = o.join(n, Seq("cat"), "full_outer")
-      .select(col("cat"),
-        coalesce(col("o_cnt"), lit(0L)).cast(dec).as("o_cnt"),
-        coalesce(col("n_cnt"), lit(0L)).cast(dec).as("n_cnt"))
-    val totals = j.agg(sum(col("o_cnt")).as("no"), sum(col("n_cnt")).as("nn"))
-    val withT = j.crossJoin(broadcast(totals))
-    val tvdNum = withT
-      .agg(sum(abs(col("o_cnt") * col("nn") - col("n_cnt") * col("no"))).as("tvd_num"))
-    val c = col("o_cnt") + col("n_cnt")
-    val bigN = col("no") + col("nn")
-    def sq(x: Column) = x * x
-    withT.crossJoin(broadcast(tvdNum))
-      .select(col("cat"),
-        col("o_cnt").cast("long").as("o_cnt"),
-        col("n_cnt").cast("long").as("n_cnt"),
-        (col("o_cnt").cast("double") / col("no").cast("double")).as("o_rate"),
-        (col("n_cnt").cast("double") / col("nn").cast("double")).as("n_rate"),
-        (sq(bigN * col("o_cnt") - col("no") * c).cast("double") /
-            (bigN * col("no") * c).cast("double") +
-          sq(bigN * col("n_cnt") - col("nn") * c).cast("double") /
-            (bigN * col("nn") * c).cast("double")).as("chi2_contrib"),
-        (col("tvd_num").cast("double") /
-          (lit(2).cast(dec) * col("no") * col("nn")).cast("double")).as("tvd"))
-  }
+  def categoricalDrift(oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame =
+    categoricalDriftBy(oneGroup(oldDf), oneGroup(newDf), catCol, OneGroup).drop("grp")
 
   /** Per-group [[categoricalDrift]] — the data-card form (one drift panel
     * per source/domain/shard), completing the per-group family next to
@@ -645,58 +595,14 @@ object AuditOps {
     * combined count per snapshot to ≤\|categories\| rows, a full-outer
     * join, 1-row broadcast totals. Nothing data-sized past the counts.
     */
-  def psiReport(oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame = {
-    OpContract.requireCols(oldDf, "AuditOps.psiReport old", catCol)
-    OpContract.requireCols(newDf, "AuditOps.psiReport new", catCol)
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
-    val dec7 = org.apache.spark.sql.types.DataTypes.createDecimalType(12, 7)
-    val o = oldDf.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).as("cat")).agg(count(lit(1)).as("o_cnt"))
-    val n = newDf.filter(col(catCol).isNotNull)
-      .groupBy(col(catCol).as("cat")).agg(count(lit(1)).as("n_cnt"))
-    val j = o.join(n, Seq("cat"), "full_outer")
-      .select(col("cat"),
-        coalesce(col("o_cnt"), lit(0L)).cast(dec).as("o_cnt"),
-        coalesce(col("n_cnt"), lit(0L)).cast(dec).as("n_cnt"))
-    val totals = j.agg(sum(col("o_cnt")).as("no"), sum(col("n_cnt")).as("nn"))
-    def l7(x: Column) = round(log(x.cast("double")), 7).cast(dec7)
-    // num rides DECIMAL(20,0) so num·ΔL is DECIMAL(34,7) — EXACT in both
-    // engines (a (38,0)×(13,7) product would overflow precision 38 and
-    // silently drop to scale 6 under Spark's precision-loss rule; DuckDB
-    // errors). Bound: |o·Nn − n·No| < 1e20, i.e. snapshots below ~1e10
-    // rows per side — the categoricalDrift 2^53 claim class, documented.
-    val dec20 = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 0)
-    val withT = j.crossJoin(broadcast(totals))
-      .withColumn("num",
-        (col("o_cnt") * col("nn") - col("n_cnt") * col("no")).cast(dec20))
-      .withColumn("dl", when(col("o_cnt") > 0 && col("n_cnt") > 0,
-        l7(col("o_cnt") * col("nn")) - l7(col("n_cnt") * col("no"))))
-      .withColumn("tnum", col("num") * col("dl"))
-    val tot = withT.agg(sum(col("tnum")).as("psi_num"))
-    withT.crossJoin(broadcast(tot))
-      .select(col("cat"),
-        col("o_cnt").cast("long").as("o_cnt"),
-        col("n_cnt").cast("long").as("n_cnt"),
-        (col("o_cnt").cast("double") / col("no").cast("double")).as("o_rate"),
-        (col("n_cnt").cast("double") / col("nn").cast("double")).as("n_rate"),
-        (col("tnum").cast("double") /
-          (col("no") * col("nn")).cast("double")).as("psi_term"),
-        (col("psi_num").cast("double") /
-          (col("no") * col("nn")).cast("double")).as("psi"))
-  }
+  def psiReport(oldDf: DataFrame, newDf: DataFrame, catCol: String): DataFrame =
+    psiReportBy(oneGroup(oldDf), oneGroup(newDf), catCol, OneGroup).drop("grp")
 
-  /** Per-group [[psiReport]] — the data-card form (one PSI per source/
-    * domain/shard), the last per-group member of the audit panel: the
-    * same exact-integer cross-multiplication with ln confined to
-    * ln(integer) rounded once into DECIMAL(12,7), every aggregation
-    * keyed by (group, category), and per-group totals/PSI numerators on
-    * ≤\|groups\|-row broadcast joins. NULL group/category keys dropped.
-    * Output: `(grp, cat, o_cnt, n_cnt, o_rate, n_rate, psi_term, psi)` —
-    * `psi` is the GROUP total, repeated on its rows; zero-count
-    * categories carry NULL psi_term and are excluded from the total
-    * (the psiReport convention — the emitted psi is the partial sum
-    * over two-sided categories).
-    */
+  /** The global count-table reports are their per-group forms over one
+    * constant group: the arithmetic lives once, in the grouped form. */
+  private val OneGroup = "__graft_one_group"
+  private def oneGroup(df: DataFrame): DataFrame = df.withColumn(OneGroup, lit(0))
+
   /** CUPED ADJUSTED A/B READOUT (Deng, Xu, Kohavi & Walker, WSDM '13) —
     * the variance-reduction step every mature experiment platform runs
     * before the significance tests in this panel: each user's PRE-period
@@ -840,6 +746,18 @@ object AuditOps {
       .orderBy("grp")
   }
 
+  /** Per-group [[psiReport]] — the data-card form (one PSI per source/
+    * domain/shard), the last per-group member of the audit panel: the
+    * same exact-integer cross-multiplication with ln confined to
+    * ln(integer) rounded once into DECIMAL(12,7), every aggregation
+    * keyed by (group, category), and per-group totals/PSI numerators on
+    * ≤\|groups\|-row broadcast joins. NULL group/category keys dropped.
+    * Output: `(grp, cat, o_cnt, n_cnt, o_rate, n_rate, psi_term, psi)` —
+    * `psi` is the GROUP total, repeated on its rows; zero-count
+    * categories carry NULL psi_term and are excluded from the total
+    * (the psiReport convention — the emitted psi is the partial sum
+    * over two-sided categories).
+    */
   def psiReportBy(oldDf: DataFrame, newDf: DataFrame, catCol: String,
       groupCol: String): DataFrame = {
     OpContract.requireCols(oldDf, "AuditOps.psiReportBy old", catCol, groupCol)

@@ -58,6 +58,6 @@ object CorpusSink {
     * `we"ird\dir` or `runs[1]` would otherwise name a pattern (a missing
     * path, or a sibling's files).
     */
-  private[sources] def literalPath(path: String): String =
+  private[graft] def literalPath(path: String): String =
     path.replaceAll("""([\\\[\]{}*?])""", """\\$1""")
 }

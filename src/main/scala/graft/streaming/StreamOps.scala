@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout}
+import graft.sources.CorpusSink.literalPath
 
 /** Streaming transforms over the events schema.
   *
@@ -797,7 +798,7 @@ object StreamOps {
     val from = fullVersions(snapRoot).filter(pub.contains).lastOption
       .getOrElse(Long.MinValue)
     val dirs = pub.filter(_ >= math.max(from, pub.min)).map(v => s"$snapRoot/v=$v")
-    spark.read.parquet(dirs: _*).dropDuplicates("doc_id")
+    spark.read.parquet(dirs.map(literalPath): _*).dropDuplicates("doc_id")
   }
 
   /** MAINTENANCE: fold the ingest log's increments into one compacted
@@ -889,7 +890,7 @@ object StreamOps {
     val idx = ingestIndexDir(snapRoot)
     def coveredBefore(v: Long): DataFrame => DataFrame = docs =>
       if (indexedVersions(s"$idx/digests").forall(_ >= v)) docs
-      else docs.join(spark.read.parquet(s"$idx/digests")
+      else docs.join(spark.read.parquet(literalPath(s"$idx/digests"))
           .filter(col("version") < v)
           .select(col("digest").as("bl_digest")).distinct(),
         md5(col("text")) === col("bl_digest"), "left_anti")
@@ -1105,7 +1106,7 @@ object StreamOps {
           //    …then drop docs whose digest is already PUBLISHED (the
           //    cross-batch probe; also what makes batch replay idempotent)
           val exact = if (indexedVersions(s"$idx/digests").isEmpty) exactB
-            else exactB.join(spark.read.parquet(s"$idx/digests")
+            else exactB.join(spark.read.parquet(literalPath(s"$idx/digests"))
                 .select(col("digest").as("bl_digest")).distinct(),
               md5(col("text")) === col("bl_digest"), "left_anti")
           // 3. near-dup decontamination against the fixed corpus index
@@ -1119,8 +1120,8 @@ object StreamOps {
           val histDups = if (indexedVersions(s"$idx/bands").isEmpty)
               corpusDups.limit(0)
             else graft.operators.DedupOps.minhashPairsAgainst(
-                (spark.read.parquet(s"$idx/hashed"),
-                  spark.read.parquet(s"$idx/bands")), dedupIn)
+                (spark.read.parquet(literalPath(s"$idx/hashed")),
+                  spark.read.parquet(literalPath(s"$idx/bands"))), dedupIn)
               .select(col("doc_new").as("doc_id"))
           val fresh0 = exact.join(
             corpusDups.unionAll(histDups).distinct(), Seq("doc_id"), "left_anti")

@@ -194,6 +194,8 @@ class CorpusSinkSpec extends SparkTestBase {
         val root = s"$base/$name"
         assert(SnapshotStore.publish(docs, s"$root/snap", col("doc_id")) == 1L)
         assert(SnapshotStore.read(spark, s"$root/snap").count() == 50)
+        // the streaming-ingest reader folds the same version directories
+        assert(graft.streaming.StreamOps.ingestCorpus(spark, s"$root/snap").count() == 50)
         assert(SnapshotStore.versions(spark, s"$root/snap").collect()
           .map(r => r.getLong(0) -> r.getLong(1)).toSeq == Seq(1L -> 50L))
         val m = CorpusSink.writeSharded(docs, s"$root/sharded", col("doc_id"), 4)
